@@ -231,7 +231,7 @@ def pack_sequences(
     documents pack nothing and are dropped.
 
     ``n_streams="auto"`` sizes the stream count from the corpus — one
-    stream per ``auto_docs_per_stream`` documents (one column-pruned
+    stream per ``auto_docs_per_stream`` documents, rounded up (one column-pruned
     count job, the ``lsh_bits_for_corpus`` discipline: a stream count
     someone fixed at small scale quietly serializes the cumsum as the
     corpus grows). NOTE: the stream hash modulus changes pack contents,
@@ -256,8 +256,12 @@ def pack_sequences(
     if max_tokens < 1:
         raise ValueError("max_tokens must be >= 1")
     if n_streams == "auto":
+        if auto_docs_per_stream < 1:
+            raise ValueError(
+                f"auto_docs_per_stream must be >= 1, got {auto_docs_per_stream!r}"
+            )
         n_docs = df.filter(F.col(n_tokens_col) > 0).count()
-        n_streams = max(1, n_docs // auto_docs_per_stream)
+        n_streams = max(1, -(-n_docs // auto_docs_per_stream))
     if not isinstance(n_streams, int) or n_streams < 1:
         raise ValueError(f"n_streams must be an int >= 1 or 'auto', got {n_streams!r}")
     sid = (

@@ -292,7 +292,13 @@ def ivf_assign(
     irrelevant — argmax over all elements with the deterministic
     struct tie-break is order-insensitive. At cluster scale the assigned
     table is written out partitioned by cell so probes are
-    partition-pruned scans."""
+    partition-pruned scans.
+
+    Raises ValueError on an empty codebook: the argmax over no centroids is
+    NULL, and a NULL cell for every row would silently drop them all from
+    downstream cell joins."""
+    if centroids.isEmpty():
+        raise ValueError("ivf_assign needs at least one centroid")
     score_fn = score_fn or _default_score
     cdim = centroids.agg(
         F.collect_list(

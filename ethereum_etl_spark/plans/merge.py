@@ -37,6 +37,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -570,8 +571,6 @@ class MergeTable:
         snapshots *newer* than the manifest pointer (a crash between
         snapshot write and pointer swap) are cleaned up too.
         """
-        import shutil
-
         stats = {"snapshots_removed": 0, "dirs_removed": 0}
         snap = self.current_snapshot()
         if snap is None or keep_last < 1:
@@ -785,6 +784,7 @@ class MergeTable:
         """
         if self.delete_where is None:
             raise ValueError("purge_tombstones requires delete_where")
+        t0 = time.time()
         snap = self.current_snapshot()
         stats = {"buckets_rewritten": 0, "tombstones_removed": 0, "snapshot_id": None}
         if snap is None:
@@ -823,7 +823,12 @@ class MergeTable:
             new_buckets[str(b)] = [bpath] if os.path.exists(bpath) else []
         snapshot = dict(snap)
         snapshot.update({"id": next_id, "parent": snap["id"], "buckets": new_buckets})
-        self._commit(snapshot)
+        try:
+            self._commit(snapshot)
+        except CommitConflict:
+            # lost the OCC race: no snapshot references this attempt's dir
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise
         stats["buckets_rewritten"] = len(touched)
         stats["snapshot_id"] = next_id
         self._log_lineage(
@@ -834,7 +839,7 @@ class MergeTable:
                 rows_after_dedup=0,
                 buckets_touched=len(touched),
                 n_buckets=self.n_buckets,
-                seconds=0.0,
+                seconds=time.time() - t0,
                 extra={"tombstones_removed": stats["tombstones_removed"]},
             )
         )
@@ -909,21 +914,29 @@ class MergeTable:
             self._log_lineage(m)
             return m
 
-        # 1. light pass — touched buckets + rows_in in one column-pruned
-        #    aggregation (only the merge-key columns are evaluated; Catalyst
-        #    prunes the heavy normalize expressions upstream). Partial
-        #    map-side combine means only ~n_buckets rows ever shuffle.
-        bucket_stats = (
-            batch.select(self._bucket_expr(batch).alias(_BUCKET_COL))
-            .groupBy(_BUCKET_COL)
-            .count()
-            .collect()
-        )
-        touched = sorted(int(r[0]) for r in bucket_stats)
-        rows_in = int(sum(r[1] for r in bucket_stats))
-
+        # 1. light pass — only a CoW merge into a table with files needs the
+        #    touched buckets BEFORE the main pass (to union their existing
+        #    rows). One column-pruned aggregation (only the merge-key
+        #    columns are evaluated; Catalyst prunes the heavy normalize
+        #    expressions upstream); partial map-side combine means only
+        #    ~n_buckets rows ever shuffle. A MOR merge only appends and an
+        #    empty table has nothing to union: both count rows_in with an
+        #    Observation on the main pass and read the touched buckets off
+        #    the written bucket dirs.
         old_buckets: dict[str, list[str]] = dict(snap["buckets"]) if snap else {}
-        existing_paths = [p for b in touched for p in old_buckets.get(str(b), [])]
+        mor_append = self.mode == "mor"
+        light_pass = not mor_append and any(old_buckets.values())
+        existing_paths: list[str] = []
+        if light_pass:
+            bucket_stats = (
+                batch.select(self._bucket_expr(batch).alias(_BUCKET_COL))
+                .groupBy(_BUCKET_COL)
+                .count()
+                .collect()
+            )
+            touched = sorted(int(r[0]) for r in bucket_stats)
+            rows_in = int(sum(r[1] for r in bucket_stats))
+            existing_paths = [p for b in touched for p in old_buckets.get(str(b), [])]
 
         # 2. main pass — ONE shuffle, ONE sort: in-batch dedup and
         #    resolve-vs-existing are the same rule (latest order_col wins,
@@ -936,13 +949,15 @@ class MergeTable:
         #    MOR mode skips the union entirely: only the deduped batch is
         #    written (as a delta per bucket) and supersession is left to
         #    read-time resolution — merge cost O(batch), not O(table).
-        mor_append = self.mode == "mor" and bool(existing_paths)
         new_part = (
             batch.withColumn(_BUCKET_COL, self._bucket_expr(batch))
             .withColumn(_SNAP_COL, F.lit(next_id))
             .withColumn(_IS_NEW_COL, F.lit(1))
         )
-        if existing_paths and not mor_append:
+        if not light_pass:
+            rows_in_obs = Observation()
+            new_part = new_part.observe(rows_in_obs, F.count(F.lit(1)).alias("rows_in"))
+        if existing_paths:
             existing = self.spark.read.option("mergeSchema", "true").parquet(*existing_paths)
             # bucket value is derivable from the key; recompute rather
             # than trusting directory names (survives schema drift)
@@ -965,6 +980,15 @@ class MergeTable:
         obs = Observation()
         resolved = resolved.observe(obs, F.count(F.lit(1)).alias("rows_out"))
         resolved.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(out_dir)
+        if not light_pass:
+            # every batch row has a winner, so the written bucket dirs are
+            # exactly the buckets the batch touches
+            prefix = f"{_BUCKET_COL}="
+            touched = sorted(
+                int(d[len(prefix):]) for d in os.listdir(out_dir) if d.startswith(prefix)
+            )
+            # an empty write may report no observed metrics: skip the wait
+            rows_in = int(rows_in_obs.get["rows_in"]) if touched else 0
         rows_dedup = int(obs.get["rows_out"]) if touched else 0
 
         new_buckets = dict(old_buckets)
@@ -1016,8 +1040,6 @@ class MergeTable:
             # against a superseded base and are referenced by no snapshot
             # (unique attempt-token dirs) — reclaim them now instead of
             # waiting for expire_snapshots
-            import shutil
-
             for d in attempt_dirs:
                 shutil.rmtree(d, ignore_errors=True)
             raise

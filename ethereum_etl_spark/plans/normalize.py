@@ -6,7 +6,8 @@ mapper chain (block_mapper.py:36-88, transaction_mapper.py:29-60,
 receipt_log_mapper.py:30-80 — SURVEY.md §2.2 P1-P12) becomes a single
 projection that Catalyst pushes into the scan: column pruning and predicate
 pushdown are free, and every expression below stays inside whole-stage
-codegen except the exact uint256 decode (Arrow-batched pandas UDF).
+codegen, the exact uint256 decode included: ``hex_to_dec_native`` builds it
+from JVM ``conv`` and decimal arithmetic, with no Python worker.
 
 Per-row invariant (BASELINE.json input_hint): ``sha256 = sha2(content, 256)``
 computed on the *raw* content — the replay-equality oracle checks this
@@ -35,7 +36,7 @@ def normalize_changes(changes: DataFrame, with_decimal_value: bool = True) -> Da
       content_size    — bytes of sanitized content
       n_tokens        — whitespace token count
       value_hex       — embedded uint256 hex payload (canonical string truth)
-      value_dec       — exact Decimal(38,0) decode of value_hex (pandas UDF)
+      value_dec       — exact Decimal(38,0) decode of value_hex (JVM-native)
       day_bucket      — seq // 86400 analog of round_timestamp_to_date
       part_label      — zero-padded partition label (reference zfill(8),
                         export_knowledge_graph_needed_common.py:68-69)

@@ -2,8 +2,11 @@
 
 Reference semantics rebuilt (SURVEY.md §2.9 T1-T4):
 - head poll      `get_current_block_number()` (eth_knowledge_graph_streamer_adapter.py:81-82)
-                 → `SELECT max(seq)` on the log (a metadata-only parquet
-                 statistics read; on Iceberg it's a snapshot-summary lookup)
+                 → the max ``seq`` of the log. For a local path source it is
+                 answered from a driver-side index of each file's seq range,
+                 built from parquet footer statistics of new or changed
+                 files only — no Spark job (on Iceberg it's a
+                 snapshot-summary lookup)
 - reorg lag      `target = head - lag` (streamer.py:110-111) — withhold the
                  newest `lag` events until they settle
 - batch cap      `target = min(target, last + batch_size)` (streamer.py:112)
@@ -13,8 +16,67 @@ Reference semantics rebuilt (SURVEY.md §2.9 T1-T4):
 
 from __future__ import annotations
 
+import os
+from urllib.parse import urlparse
+
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# (min seq, max seq) of one log file; (None, None) when it holds no seq
+Bounds = tuple[int | None, int | None]
+
+
+def _hidden(name: str) -> bool:
+    """Spark's rule for paths a file scan skips: ``_``-prefixed names that
+    are not ``key=value`` partition dirs, ``.``-prefixed names, and files
+    still being copied."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _data_files(root: str):
+    """(path, (mtime_ns, size)) of every file a Spark scan of ``root`` reads."""
+    if os.path.isfile(root):
+        st = os.stat(root)
+        yield root, (st.st_mtime_ns, st.st_size)
+        return
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [d for d in dirnames if not _hidden(d)]
+        for name in filenames:
+            if not _hidden(name):
+                path = os.path.join(dirpath, name)
+                st = os.stat(path)
+                yield path, (st.st_mtime_ns, st.st_size)
+
+
+def _seq_bounds(path: str) -> Bounds:
+    """Seq range of one parquet file from its footer's row-group
+    statistics; a file with a row group lacking min/max stats has its
+    ``seq`` column read instead."""
+    pf = pq.ParquetFile(path)
+    md = pf.metadata
+    col = next(
+        (i for i in range(md.num_columns) if md.schema.column(i).path == "seq"), None
+    )
+    if col is None:
+        return None, None
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        if rg.num_rows == 0:
+            continue
+        st = rg.column(col).statistics
+        if st is None or not st.has_min_max:
+            mm = pc.min_max(pf.read(columns=["seq"]).column("seq"))
+            return mm["min"].as_py(), mm["max"].as_py()
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return lo, hi
 
 
 class TailSource:
@@ -29,17 +91,50 @@ class TailSource:
         self._source = source
         self.lag = lag
         self.batch_size = batch_size
+        # path -> ((mtime_ns, size), seq bounds) for a local path source
+        self._index: dict[str, tuple[tuple[int, int], Bounds]] = {}
 
     def df(self) -> DataFrame:
         if isinstance(self._source, str):
             return self.spark.read.parquet(self._source)
         return self._source
 
+    def _local_root(self) -> str | None:
+        """Local filesystem path of a path source; None for a DataFrame or
+        a remote URI, which keep the Spark scan."""
+        if not isinstance(self._source, str):
+            return None
+        u = urlparse(self._source)
+        if u.scheme == "file":
+            return u.path
+        return self._source if u.scheme == "" else None
+
+    def _file_bounds(self, root: str) -> dict[str, Bounds]:
+        """Seq bounds of every data file under ``root``. Footers are read
+        only for files that are new or whose (mtime, size) changed; files
+        that disappeared leave the index."""
+        if not os.path.exists(root):
+            raise FileNotFoundError(f"change log {root} does not exist")
+        index = {}
+        for path, stamp in _data_files(root):
+            hit = self._index.get(path)
+            if hit is None or hit[0] != stamp:
+                hit = (stamp, _seq_bounds(path))
+            index[path] = hit
+        self._index = index
+        return {p: b for p, (_, b) in index.items()}
+
     def head_seq(self) -> int:
-        """Current head of the log (max seq). Parquet answers this from
-        footer statistics; Iceberg from the snapshot summary."""
-        row = self.df().select(F.max("seq")).first()
-        return -1 if row[0] is None else int(row[0])
+        """Current head of the log (max seq); -1 for an empty log. A local
+        path source answers from footer statistics without a Spark job."""
+        root = self._local_root()
+        if root is None:
+            row = self.df().select(F.max("seq")).first()
+            return -1 if row[0] is None else int(row[0])
+        return max(
+            (hi for _, hi in self._file_bounds(root).values() if hi is not None),
+            default=-1,
+        )
 
     def next_range(self, last_synced: int) -> tuple[int, int] | None:
         """(start, end) of the next micro-batch after ``last_synced``,
@@ -51,6 +146,21 @@ class TailSource:
         return last_synced + 1, target
 
     def range_df(self, start: int, end: int) -> DataFrame:
-        """Scan of one micro-batch — the predicate is pushed into the parquet
-        reader (file/row-group pruning on the seq statistics)."""
-        return self.df().filter((F.col("seq") >= start) & (F.col("seq") <= end))
+        """Scan of one micro-batch. A local path source reads only the files
+        whose seq range overlaps ``[start, end]`` (``basePath`` keeps any
+        partition columns); the predicate is pushed into the parquet reader
+        either way (row-group pruning on the seq statistics)."""
+        pred = (F.col("seq") >= start) & (F.col("seq") <= end)
+        root = self._local_root()
+        if root is None:
+            return self.df().filter(pred)
+        files = sorted(
+            p for p, (lo, hi) in self._file_bounds(root).items()
+            if lo is not None and lo <= end and hi >= start
+        )
+        if not files:
+            return self.df().filter(pred)  # empty, with the log's schema
+        reader = self.spark.read
+        if os.path.isdir(root):
+            reader = reader.option("basePath", root)
+        return reader.parquet(*files).filter(pred)

@@ -170,6 +170,42 @@ def test_purge_tombstones_drops_old_keeps_recent(spark, tmp_path, mode):
     assert t.purge_tombstones(below_seq=5)["tombstones_removed"] == 0
 
 
+def _purge_table(spark, root):
+    t = MergeTable(spark, root, merge_keys=KEYS, n_buckets=4, delete_where="op = 'd'")
+    t.merge(_mk(spark, [(1, "r", "a.py", "c1", "v1", "u"),
+                        (2, "r", "b.py", "c2", "v2", "u")]), "b1")
+    t.merge(_mk(spark, [(4, "r", "a.py", "c1", None, "d")]), "b2")
+    return t
+
+
+def test_purge_tombstones_logs_its_wall_time(spark, tmp_path):
+    import json
+
+    t = _purge_table(spark, str(tmp_path / "t"))
+    assert t.purge_tombstones(below_seq=5)["tombstones_removed"] == 1
+    with open(os.path.join(t.root, "lineage.jsonl")) as f:
+        rec = [json.loads(line) for line in f][-1]
+    assert rec["batch_id"] == "purge-below-5"
+    assert rec["seconds"] > 0
+
+
+def test_purge_tombstones_reclaims_its_dir_on_commit_conflict(spark, tmp_path, monkeypatch):
+    from ethereum_etl_spark.plans.merge import CommitConflict
+
+    t = _purge_table(spark, str(tmp_path / "t"))
+    before = t.current_snapshot()
+
+    def lose(snapshot):
+        raise CommitConflict("another writer committed first")
+
+    monkeypatch.setattr(t.catalog, "commit", lose)
+    with pytest.raises(CommitConflict):
+        t.purge_tombstones(below_seq=5)
+    assert not [d for d in os.listdir(os.path.join(t.root, "data")) if "-purge-" in d]
+    assert t.current_snapshot() == before
+    assert t.verify_integrity()["orphan_dirs"] == []
+
+
 def test_purge_requires_delete_where(spark, tmp_path):
     t = MergeTable(spark, str(tmp_path / "t"), merge_keys=KEYS, n_buckets=4)
     with pytest.raises(ValueError):

@@ -1,5 +1,6 @@
 """Corpus prep operators: deterministic hash split + boilerplate removal."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from ethereum_etl_spark.operators.corpus import (
@@ -285,3 +286,15 @@ def test_tokenize_with_vocab_order_and_oov(spark):
            for r in tokenize_with_vocab(docs, vocab).collect()}
     assert out[1] == (5, [2, 1, 2, 0, 1])  # zzz -> OOV 0; order preserved
     assert out[2] == (3, [1, 1, 3])
+
+
+def test_pack_sequences_auto_streams_round_up(spark):
+    """n_streams='auto' rounds up: 199 documents at 100 per stream is 2
+    streams, not 1; a non-positive per-stream size is a ValueError."""
+    from ethereum_etl_spark.operators.corpus import pack_sequences
+
+    df = spark.createDataFrame([(i, 5) for i in range(199)], "doc_id long, n_tokens long")
+    rows = pack_sequences(df, max_tokens=64, n_streams="auto", auto_docs_per_stream=100).collect()
+    assert {r["stream_id"] for r in rows} == {0, 1}
+    with pytest.raises(ValueError, match="auto_docs_per_stream"):
+        pack_sequences(df, max_tokens=64, n_streams="auto", auto_docs_per_stream=0)

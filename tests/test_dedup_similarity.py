@@ -307,3 +307,13 @@ def test_ann_topk_quantized_matches_brute_on_testdata(spark):
     b = sorted((r["query_id"], r["rank"], r["neighbor_id"]) for r in brute.collect())
     a = sorted((r["query_id"], r["rank"], r["neighbor_id"]) for r in quant.collect())
     assert a == b
+
+
+def test_ivf_assign_rejects_empty_codebook(spark, embeddings):
+    """With no centroids every row would get cell=NULL and vanish from
+    downstream cell joins; an empty codebook is an error instead."""
+    from ethereum_etl_spark.operators.similarity import ivf_assign
+
+    corpus = embeddings.limit(20)
+    with pytest.raises(ValueError, match="centroid"):
+        ivf_assign(corpus, corpus.filter(F.col("vec_id") < 0))

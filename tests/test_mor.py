@@ -1,6 +1,10 @@
 """Merge-on-read mode: same semantics as copy-on-write, O(batch) merges,
 auto-compaction."""
 
+import json
+import os
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ethereum_etl_spark.plans.merge import MergeTable
@@ -83,3 +87,51 @@ def test_empty_batch_merge_is_clean_commit(spark, tmp_path):
     assert _state(t) == before
     # re-merge of the empty batch is the no-op idempotence path
     assert t.merge(empty, "b-empty").noop
+
+
+def _light_pass(table, batch):
+    """(rows_in, buckets_touched) as the light-pass aggregation counts them."""
+    return batch.count(), len(table.touched_buckets(batch))
+
+
+def _lineage(table):
+    with open(os.path.join(table.root, "lineage.jsonl")) as f:
+        return [json.loads(line) for line in f]
+
+
+def test_append_only_merges_skip_the_light_pass(spark, tmp_path, monkeypatch):
+    """MOR merges and merges into an empty table take rows_in from an
+    Observation and the touched buckets from the written bucket dirs. No
+    collect runs (the light pass is the merge's only collect), and the
+    lineage matches what the light pass would have counted."""
+    changes = generate_repo_changes(spark, 1200, seed=12, partitions=4)
+    batches = [
+        normalize_changes(changes.filter((F.col("seq") >= s) & (F.col("seq") <= e)))
+        for s, e in [(0, 399), (400, 409), (200, 999), (1000, 1199)]
+    ]
+    empty = normalize_changes(changes.filter(F.col("seq") < 0))
+    mor = MergeTable(spark, str(tmp_path / "mor"), n_buckets=8, mode="mor",
+                     compact_threshold=2)
+    expected = [_light_pass(mor, b) for b in batches + [empty]]
+    assert expected[1][1] < 8 and expected[-1] == (0, 0)
+    cow = MergeTable(spark, str(tmp_path / "cow"), n_buckets=8)
+    cow_empty = MergeTable(spark, str(tmp_path / "cow_empty"), n_buckets=8)
+
+    def no_collect(self, *a, **k):
+        raise AssertionError("a light pass ran")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "collect", no_collect)
+        mor_ms = [mor.merge(b, f"b{i}") for i, b in enumerate(batches + [empty])]
+        first = cow.merge(batches[0], "b0")  # CoW into an empty table
+        none = cow_empty.merge(empty, "e0")  # empty batch into an empty table
+    got = [(x.rows_in, x.buckets_touched) for x in mor_ms]
+    assert got == expected
+    assert (first.rows_in, first.buckets_touched) == expected[0]
+    assert (none.rows_in, none.buckets_touched, none.rows_after_dedup) == (0, 0, 0)
+    assert [(r["rows_in"], r["buckets_touched"]) for r in _lineage(mor)] == expected
+    # CoW merges into a table with files keep the light pass
+    later = [cow.merge(b, f"b{i}") for i, b in enumerate(batches) if i > 0]
+    assert [(x.rows_in, x.buckets_touched) for x in later] == expected[1:4]
+    assert _state(mor) == _state(cow)
+    assert cow_empty.read().count() == 0 and cow_empty.verify_integrity()["ok"]

@@ -47,8 +47,8 @@ def row_key(row):
     return tuple(norm(v) for v in row)
 
 
-def main() -> int:
-    args = sys.argv[1:]
+def main(argv: list[str] | None = None) -> int:
+    args = sys.argv[1:] if argv is None else list(argv)
     json_path = None
     if "--json" in args:
         i = args.index("--json")
@@ -91,7 +91,8 @@ def main() -> int:
             print(f"ok   {name}: rows-only ({len(srows)} rows)")
             if len(srows) == 0:
                 print(f"WARN {name}: 0 rows")
-            record(name, rows_match=len(srows) > 0, spark_rows=len(srows),
+            # nothing checked the rows: rows_match is unknown, not True
+            record(name, rows_match=None, spark_rows=len(srows),
                    err="rows-only (no oracle)")
             continue
         try:
