@@ -7,11 +7,9 @@ lakehouse table:
 
 - **Key-bucketed layout**: rows live in ``n_buckets`` hash buckets of the
   merge key (xxhash64 → pmod), so a MERGE only rewrites the buckets the
-  batch touches — merge cost scales with the *delta*, not the table. This
-  is Iceberg's ``bucket(N, key)`` partition transform; on a real cluster the
-  same code targets Iceberg ``MERGE INTO`` and a storage-partitioned join
-  removes the union shuffle entirely. (No Iceberg runtime jar ships in this
-  sandbox, so the snapshot/commit protocol is implemented here directly.)
+  batch touches — merge cost scales with the *delta*, not the table
+  (Iceberg's ``bucket(N, key)`` transform; the snapshot/commit protocol is
+  implemented here directly, behind the ``SnapshotCatalog`` seam).
 
 - **Snapshot isolation + atomic commit**: every merge writes new immutable
   parquet files, then a new snapshot manifest, then atomically swaps the
@@ -25,7 +23,8 @@ lakehouse table:
   to exactly-once *effective* semantics.
 
 - **Additive schema evolution** (reference rule, SURVEY.md §1.3): new
-  columns union in by name; old rows read as NULL; nothing is rewritten.
+  columns union in by name into the schema each manifest carries; old rows
+  read as NULL; nothing is rewritten.
 
 - **Latest-wins resolution**: within a merge key, the row with the highest
   ``order_col`` (seq) wins — the CDC upsert semantic of mongo_db.py:72-83
@@ -41,27 +40,69 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Sequence
+from functools import cached_property
+from typing import Iterable, Sequence
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
 
 class CommitConflict(RuntimeError):
     """Another writer committed to this table after the current operation
-    read its base snapshot. The losing writer must re-read the table state
-    and redo its merge — blindly retrying the commit would silently drop
-    the other writer's changes (the lost-update anomaly this check exists
-    to prevent). Single-writer-per-table is the supported deployment (one
-    Streamer owns a table); this turns accidental concurrent writers from
-    silent corruption into a loud error — Iceberg's optimistic-concurrency
-    commit semantic."""
+    read its base snapshot. The loser must re-read the table and redo its
+    merge: blindly retrying the commit would drop the other writer's
+    changes (a lost update). Iceberg's optimistic-concurrency semantic."""
 
 
 _BUCKET_COL = "__bucket"
 _IS_NEW_COL = "__is_new"
 _RN_COL = "__rn"
 _SNAP_COL = "__snap"
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, array element and map value nullable — the
+    way a parquet scan reports it."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                           for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _union_type(ours: DataType, theirs: DataType, name: str = "") -> DataType:
+    """By-name union of two nullable types: ``ours``' struct fields in
+    order (merged recursively), then the fields only ``theirs`` has. Any
+    other pair of types must be equal; a clash raises ValueError."""
+    if isinstance(ours, StructType) and isinstance(theirs, StructType):
+        added = {f.name: f for f in theirs.fields}
+        fields = []
+        for f in ours.fields:
+            t = f.dataType
+            if f.name in added:
+                t = _union_type(t, added.pop(f.name).dataType, f"{name}{f.name}.")
+            fields.append(StructField(f.name, t, True, f.metadata))
+        return StructType(fields + list(added.values()))
+    if isinstance(ours, ArrayType) and isinstance(theirs, ArrayType):
+        return ArrayType(_union_type(ours.elementType, theirs.elementType, name), True)
+    if isinstance(ours, MapType) and isinstance(theirs, MapType):
+        return MapType(_union_type(ours.keyType, theirs.keyType, name),
+                       _union_type(ours.valueType, theirs.valueType, name), True)
+    if ours != theirs:
+        raise ValueError(f"column {name.rstrip('.')!r}: {theirs.simpleString()} "
+                         f"cannot merge into the table's {ours.simpleString()}")
+    return ours
+
+
+def _referenced_paths(snapshots: Iterable[dict]) -> set[str]:
+    """Normalized data paths the given snapshot manifests reference."""
+    return {os.path.normpath(p)
+            for s in snapshots for plist in s["buckets"].values() for p in plist}
 
 
 @dataclass
@@ -79,31 +120,24 @@ class MergeMetrics:
     extra: dict = field(default_factory=dict)
 
     def to_dict(self) -> dict:
-        return {
-            "batch_id": self.batch_id,
-            "snapshot_id": self.snapshot_id,
-            "rows_in": self.rows_in,
-            "rows_after_dedup": self.rows_after_dedup,
-            "buckets_touched": self.buckets_touched,
-            "n_buckets": self.n_buckets,
-            "seconds": round(self.seconds, 4),
-            "noop": self.noop,
-            **self.extra,
-        }
+        fields = {k: v for k, v in vars(self).items() if k != "extra"}
+        return {**fields, "seconds": round(self.seconds, 4), **self.extra}
 
 
 class SnapshotCatalog:
     """The commit-protocol seam (Iceberg adapter point): ``MergeTable``
     reads and publishes snapshot manifests ONLY through this interface, so
-    the hand-built file protocol (``FileSnapshotCatalog``, the default) and
-    a real Iceberg catalog — whose ``commit()`` would be an Iceberg
-    transaction (REST/Hive catalog compare-and-swap on the table metadata
-    pointer) — are swappable without touching any merge/read logic.
+    the file protocol (``FileSnapshotCatalog``, the default) and a real
+    Iceberg catalog (whose ``commit()`` is a catalog compare-and-swap) are
+    swappable without touching any merge/read logic.
 
     A snapshot is a plain dict: ``id``, ``parent``, ``buckets`` (bucket id
-    -> list of data paths), ``committed_batches``, plus the persisted table
-    config (``merge_keys``, ``order_col``, ``n_buckets``, ``merge_salts``,
-    ``delete_where``) that ``MergeTable.open`` reads back.
+    -> list of data paths), ``committed_batches``, ``schema`` (the table
+    schema as Spark StructType JSON: the all-nullable by-name union of every
+    frame committed so far, so scans pass it instead of inferring it from
+    file footers; manifests written before it existed lack it), plus the
+    persisted table config (``merge_keys``, ``order_col``, ``n_buckets``,
+    ``merge_salts``, ``delete_where``) that ``MergeTable.open`` reads back.
     """
 
     def current_snapshot(self) -> dict | None:
@@ -141,18 +175,14 @@ class FileSnapshotCatalog(SnapshotCatalog):
 
     ``commit()`` serializes the check+swap pair through a short O_EXCL
     lock file. Locks left by crashed writers are STOLEN after ``lock_ttl``
-    seconds of inactivity — via atomic rename, so of N concurrent stealers
-    exactly one wins (the losers' renames raise) and a fresh lock acquired
-    by a third writer in between can never be unlinked by a late stealer.
-    A live writer stalled past ``lock_ttl`` inside the critical section
-    (GC pause, slow network FS) re-verifies ownership (lock inode) right
-    before publishing and aborts with CommitConflict if it was stolen —
-    this NARROWS the window in which a stalled holder can race the
-    stealer's check+swap (to the gap between the re-verify and the two
-    renames) rather than eliminating it; a holder that stalls precisely
-    inside that gap can still publish over the stealer. True elimination
-    needs a compare-and-swap primitive the filesystem doesn't offer —
-    that is exactly what a real Iceberg catalog ``commit()`` provides
+    seconds of inactivity, by atomic rename: of N concurrent stealers
+    exactly one wins, and a fresh lock taken by a third writer in between
+    is never unlinked. A live writer stalled past ``lock_ttl`` inside the
+    critical section re-verifies ownership (lock inode) right before
+    publishing and aborts with CommitConflict if it was stolen. That
+    NARROWS the race with the stealer to the gap between the re-verify
+    and the two renames; closing it needs a compare-and-swap the
+    filesystem lacks, which a real Iceberg catalog ``commit()`` provides
     through this same ``SnapshotCatalog`` seam.
     """
 
@@ -209,13 +239,10 @@ class FileSnapshotCatalog(SnapshotCatalog):
             return False
 
     def _acquire_lock(self, lock: str) -> int:
-        # The wait budget must EXCEED lock_ttl: a lock left by a crashed
-        # writer only becomes stealable after lock_ttl of inactivity, so a
-        # fixed attempt count shorter than that would make every commit
-        # behind a crash raise CommitConflict (and merge(conflict_retries)
-        # redo the full merge computation) until some attempt happened to
-        # straddle the staleness boundary. Budget = 2x lock_ttl + 5 s:
-        # enough to outlive the TTL, win the steal, and absorb contention.
+        # The wait budget must EXCEED lock_ttl: a crashed writer's lock is
+        # stealable only after lock_ttl of inactivity, so a shorter budget
+        # would fail every commit behind a crash. 2x lock_ttl + 5 s outlives
+        # the TTL, wins the steal and absorbs contention.
         deadline = time.time() + 2.0 * self.lock_ttl + 5.0
         while time.time() < deadline:
             try:
@@ -226,9 +253,8 @@ class FileSnapshotCatalog(SnapshotCatalog):
                 except OSError:
                     continue  # raced with the holder's release
                 if stale:
-                    # steal by atomic rename: exactly one stealer's rename
-                    # succeeds, so two stealers can never both unlink-and-
-                    # acquire, and a fresh third-party lock is untouchable
+                    # steal by atomic rename: exactly one stealer succeeds,
+                    # and a fresh third-party lock is untouchable
                     grave = lock + f".stale-{uuid.uuid4().hex[:8]}"
                     try:
                         os.rename(lock, grave)
@@ -240,9 +266,7 @@ class FileSnapshotCatalog(SnapshotCatalog):
                         pass
                     continue
                 time.sleep(0.05)
-        raise CommitConflict(
-            f"could not acquire {lock} — another writer is mid-commit"
-        )
+        raise CommitConflict(f"could not acquire {lock} — another writer is mid-commit")
 
     def _write_temp_files(self, snapshot: dict, spath: str, mp: str) -> tuple[str, str]:
         """Stage the snapshot manifest + pointer to temp names (published
@@ -338,25 +362,21 @@ class MergeTable:
         - ``"cow"`` (copy-on-write): each merge rewrites the touched buckets
           with winners resolved — reads are raw scans. Best for bulk replay.
         - ``"mor"`` (merge-on-read): each merge APPENDS a delta file per
-          touched bucket (merge cost O(batch), independent of table size —
-          the Iceberg MOR pattern); winners are resolved at read time, and
-          buckets holding more than ``compact_threshold`` files are
-          compacted inside the next merge's commit. Best for micro-batch
-          streaming where merge-apply latency is the headline metric.
+          touched bucket (merge cost O(batch)); winners are resolved at
+          read time, and buckets holding more than ``compact_threshold``
+          files are compacted inside the next merge's commit. Best for
+          micro-batch streaming.
 
-        ``merge_salts``: sub-partition count for the merge-apply window (the
-        north rule's salted repartitioning before merge-apply). The winner
-        sort's parallelism is otherwise capped at ``n_buckets`` — at 100 TB
-        with 32 buckets that is ~3 TB per sort partition. The salt is a
-        *key-determined* hash (all rows of a merge key share a salt), so the
-        per-key window stays correct while the sort fans out to
-        ``n_buckets * merge_salts`` partitions. Sizing rule: buckets*salts ≈
-        cluster cores * k. Default 1 = off.
+        ``merge_salts``: sub-partition count for the merge-apply window. The
+        winner sort's parallelism is otherwise capped at ``n_buckets``. The
+        salt is a *key-determined* hash (all rows of a merge key share a
+        salt), so the per-key window stays correct while the sort fans out
+        to ``n_buckets * merge_salts`` partitions (≈ cluster cores * k).
+        Default 1 = off.
 
         ``auto_expire_keep``: when set, every commit is followed by
-        ``expire_snapshots(keep_last=auto_expire_keep)`` — the bounded-disk
-        mode for long-running streams (a micro-batch stream otherwise
-        accumulates one superseded copy of every touched bucket per merge).
+        ``expire_snapshots(keep_last=auto_expire_keep)`` — bounded disk for
+        long-running streams.
 
         ``delete_where``: a SQL boolean over the row marking it a CDC
         DELETE (binlog/WAL ``op = 'd'`` semantics), e.g. ``"op = 'd'"``.
@@ -384,6 +404,7 @@ class MergeTable:
         self.auto_expire_keep = auto_expire_keep
         self.delete_where = delete_where
         self.catalog = catalog if catalog is not None else FileSnapshotCatalog(root)
+        self._delete_binds: dict[StructType, bool] = {}  # see _delete_pred
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
 
     @classmethod
@@ -396,9 +417,8 @@ class MergeTable:
     ) -> "MergeTable":
         """Construct from the table's OWN persisted config: every snapshot
         manifest records ``merge_keys`` / ``order_col`` / ``n_buckets`` /
-        ``merge_salts`` / ``delete_where``, and guessing defaults instead
-        (the old CLI behavior) silently resolves winners with the wrong
-        key/order columns on any table built with non-default keys.
+        ``merge_salts`` / ``delete_where``; guessed defaults would resolve
+        winners with the wrong key/order columns.
 
         Explicit kwargs that CONFLICT with the persisted config raise
         ValueError; config keys absent from the manifest (pre-persistence
@@ -422,9 +442,8 @@ class MergeTable:
                     )
                     if not same:
                         raise ValueError(
-                            f"{k}={given!r} conflicts with the table's "
-                            f"persisted {k}={persisted!r} (snapshot "
-                            f"{snap['id']} at {root})"
+                            f"{k}={given!r} conflicts with the table's persisted "
+                            f"{k}={persisted!r} (snapshot {snap['id']} at {root})"
                         )
                 elif persisted is not None:
                     kwargs[k] = persisted
@@ -436,9 +455,8 @@ class MergeTable:
     @staticmethod
     def _attempt_token() -> str:
         """Per-attempt data-dir suffix: two writers racing the same next_id
-        can both write files, but never into the same directory — the
-        commit CAS then rejects the loser, whose orphan dir is reclaimed by
-        ``expire_snapshots`` (it is referenced by no retained snapshot)."""
+        never write into the same directory; the commit CAS rejects the
+        loser, whose orphan dir ``expire_snapshots`` reclaims."""
         return uuid.uuid4().hex[:6]
 
     def current_snapshot(self) -> dict | None:
@@ -450,10 +468,10 @@ class MergeTable:
         return self.catalog.snapshot_at(snapshot_id)
 
     def history(self) -> list[dict]:
-        """Retained snapshots, oldest first — the audit/observability view
-        (Iceberg's ``snapshots`` metadata table): id, parent, batch count,
-        file count, and whether it is the current pointer. Time-travel and
-        ``changes_since`` cursors are valid exactly for the ids listed."""
+        """Retained snapshots, oldest first (Iceberg's ``snapshots``
+        metadata table): id, parent, batch count, file count, and whether it
+        is the current pointer — the ids time travel and ``changes_since``
+        accept."""
         cur = self.current_snapshot()
         out = []
         for i in self.catalog.snapshot_ids():
@@ -483,11 +501,8 @@ class MergeTable:
         Spark job. Returns a report dict; ``ok`` is False iff a promise is
         BROKEN (missing referenced files, broken parent chain, shrinking
         batch sets). Unreferenced data dirs are NOT failures — they are the
-        expected debris of crashed/lost OCC attempts, listed as
-        ``orphan_dirs`` (reclaimed by ``expire_snapshots``).
-
-        Run it after a crash, before trusting a restored backup, or as a
-        periodic janitor assertion alongside the relay.
+        debris of crashed/lost OCC attempts, listed as ``orphan_dirs``
+        (reclaimed by ``expire_snapshots``).
         """
         report: dict = {
             "ok": True, "issues": [], "snapshots": 0,
@@ -517,11 +532,10 @@ class MergeTable:
         ids = [i for i in ids if i <= cur["id"]]
         report["snapshots"] = len(ids)
 
-        referenced: set[str] = set()
+        snaps = [self.catalog.snapshot_at(i) for i in sorted(ids)]
         prev_batches: set[str] | None = None
         prev_id: int | None = None
-        for i in sorted(ids):
-            s = self.catalog.snapshot_at(i)
+        for i, s in zip(sorted(ids), snaps):
             if s["id"] != i:
                 bad(f"snapshot file {i}.json carries id {s['id']}")
             # parent chain: each retained snapshot's parent is the previous
@@ -534,35 +548,37 @@ class MergeTable:
                 bad(f"snapshot {i} dropped committed batches "
                     f"{sorted(prev_batches - batches)}")
             prev_batches, prev_id = batches, i
-            for plist in s["buckets"].values():
-                referenced.update(os.path.normpath(p) for p in plist)
 
+        referenced = _referenced_paths(snaps)
         for p in sorted(referenced):
             if not os.path.isdir(p):
                 report["missing_paths"].append(p)
                 bad(f"referenced data path missing: {p}")
 
-        data_root = os.path.join(self.root, "data")
-        if os.path.isdir(data_root):
-            for d in sorted(os.listdir(data_root)):
-                dpath = os.path.join(data_root, d)
-                if not os.path.isdir(dpath):
-                    continue
-                bdirs = [
-                    os.path.normpath(os.path.join(dpath, b))
-                    for b in os.listdir(dpath)
-                    if os.path.isdir(os.path.join(dpath, b))
-                ]
-                if bdirs and not any(b in referenced for b in bdirs):
-                    report["orphan_dirs"].append(d)
+        report["orphan_dirs"] = [
+            os.path.basename(d) for d, bdirs in self._data_dirs()
+            if bdirs and not any(b in referenced for b in bdirs)
+        ]
         return report
+
+    def _data_dirs(self) -> list[tuple[str, list[str]]]:
+        """(dir, its normalized child dirs) for every write-attempt dir
+        under ``data/``: the children are its bucket dirs."""
+        root = os.path.join(self.root, "data")
+        out = []
+        for d in sorted(os.listdir(root)) if os.path.isdir(root) else []:
+            dpath = os.path.join(root, d)
+            if os.path.isdir(dpath):
+                out.append((dpath, [os.path.normpath(os.path.join(dpath, b))
+                                    for b in sorted(os.listdir(dpath))
+                                    if os.path.isdir(os.path.join(dpath, b))]))
+        return out
 
     def expire_snapshots(self, keep_last: int = 2) -> dict:
         """Delete snapshot manifests — and the data directories no retained
         snapshot references — the Iceberg ``expire_snapshots`` + ``vacuum``
-        analog this table previously lacked (every COW merge strands the
-        superseded copy of each touched bucket; a long stream grows the
-        table's footprint linearly in merges, not in data).
+        analog (every COW merge strands the superseded copy of each touched
+        bucket).
 
         Retains the current snapshot plus the ``keep_last - 1`` before it
         (older snapshots are no longer time-travel-readable). Readers are
@@ -578,26 +594,15 @@ class MergeTable:
         ids = self.catalog.snapshot_ids()
         cur = snap["id"]
         retained = {i for i in ids if cur - keep_last < i <= cur}
-        referenced: set[str] = set()
-        for i in sorted(retained):
-            s = self.catalog.snapshot_at(i)
-            for plist in s["buckets"].values():
-                referenced.update(os.path.normpath(p) for p in plist)
-        data_root = os.path.join(self.root, "data")
-        for d in sorted(os.listdir(data_root)):
-            dpath = os.path.join(data_root, d)
-            if not os.path.isdir(dpath):
-                continue
-            for b in sorted(os.listdir(dpath)):
-                bpath = os.path.normpath(os.path.join(dpath, b))
-                if os.path.isdir(bpath) and bpath not in referenced:
-                    shutil.rmtree(bpath, ignore_errors=True)
-                    stats["dirs_removed"] += 1
-            # drop the snapshot dir once no bucket dirs remain (write-marker
+        referenced = _referenced_paths(self.catalog.snapshot_at(i) for i in retained)
+        for dpath, bdirs in self._data_dirs():
+            dropped = [b for b in bdirs if b not in referenced]
+            for b in dropped:
+                shutil.rmtree(b, ignore_errors=True)
+            stats["dirs_removed"] += len(dropped)
+            # drop the attempt dir once no bucket dirs remain (write-marker
             # files like _SUCCESS don't keep it alive)
-            if not any(
-                os.path.isdir(os.path.join(dpath, e)) for e in os.listdir(dpath)
-            ):
+            if len(dropped) == len(bdirs):
                 shutil.rmtree(dpath, ignore_errors=True)
         for i in ids:
             if i not in retained:
@@ -606,39 +611,80 @@ class MergeTable:
         return stats
 
     # ---------------- read path ----------------
+    #
+    # Column expressions are built once per table and reused by every call:
+    # each F.* call is a few Py4J round trips, which a micro-batch loop
+    # would otherwise pay again on every cycle.
 
-    def _bucket_expr(self, df: DataFrame):
+    @cached_property
+    def _bucket(self) -> Column:
         return F.pmod(F.xxhash64(*[F.col(k) for k in self.merge_keys]), F.lit(self.n_buckets))
 
-    def _salt_expr(self):
-        """Key-determined sub-partition salt: a second, independent hash of
-        the merge key (seeded so it does not correlate with the bucket
-        hash), pmod merge_salts — every row of a key maps to one salt."""
-        return F.pmod(
-            F.xxhash64(F.lit("__merge_salt"), *[F.col(k) for k in self.merge_keys]),
-            F.lit(self.merge_salts),
-        )
-
-    def _resolve_winners(self, df: DataFrame, extra_order=()) -> DataFrame:
-        """Latest row per merge key in ONE bucket-partitioned sort (see
-        merge() §2): order by (keys, order_col desc, __snap desc, extras),
-        keep the first row of every key run. With merge_salts > 1 the
-        exchange/sort partitioning is (bucket, key-salt) — same correctness
-        (keys never straddle salts), n_buckets*merge_salts-way parallel."""
-        snap_ord = F.coalesce(F.col(_SNAP_COL), F.lit(-1)).desc()
-        key_struct = F.struct(*[F.col(k) for k in self.merge_keys])
+    def _first_of_key(self, *extra_order: Column) -> Column:
+        """True on the first row of every merge-key run, ordered by (keys,
+        order_col desc, __snap desc, extras) within the bucket partition.
+        With merge_salts > 1 the partitioning is (bucket, key-salt): a
+        second, independent hash of the merge key (seeded so it does not
+        correlate with the bucket hash), so every row of a key maps to one
+        salt and keys never straddle partitions."""
         parts = [F.col(_BUCKET_COL)]
         if self.merge_salts > 1:
-            parts.append(self._salt_expr())
+            parts.append(F.pmod(
+                F.xxhash64(F.lit("__merge_salt"), *[F.col(k) for k in self.merge_keys]),
+                F.lit(self.merge_salts),
+            ))
+        snap_ord = F.coalesce(F.col(_SNAP_COL), F.lit(-1)).desc()
         w = Window.partitionBy(*parts).orderBy(
             *self.merge_keys, F.col(self.order_col).desc(), snap_ord, *extra_order
         )
+        key_struct = F.struct(*[F.col(k) for k in self.merge_keys])
         prev_key = F.lag(key_struct).over(w)
-        return (
-            df.withColumn(_RN_COL, prev_key.isNull() | (prev_key != key_struct))
-            .filter(F.col(_RN_COL))
-            .drop(_RN_COL)
-        )
+        return prev_key.isNull() | (prev_key != key_struct)
+
+    @cached_property
+    def _winner(self) -> Column:
+        return self._first_of_key()
+
+    @cached_property
+    def _new_winner(self) -> Column:
+        """``_winner`` with incoming rows beating existing ones on ties."""
+        return self._first_of_key(F.col(_IS_NEW_COL).desc())
+
+    def _resolve_winners(self, df: DataFrame, new_wins_ties: bool = False) -> DataFrame:
+        """Latest row per merge key in ONE bucket-partitioned sort (see
+        merge() §2): keep the first row of every key run."""
+        first = self._new_winner if new_wins_ties else self._winner
+        return df.withColumn(_RN_COL, first).filter(_RN_COL).drop(_RN_COL)
+
+    def _scan(self, snap: dict, paths: Sequence[str]) -> DataFrame:
+        """Data files ``paths`` of snapshot ``snap``, read with the schema
+        its manifest carries, so no footer-inference job runs. A manifest
+        without one falls back to ``mergeSchema`` inference."""
+        reader = self.spark.read
+        if "schema" in snap:
+            reader = reader.schema(StructType.fromJson(snap["schema"]))
+        else:
+            reader = reader.option("mergeSchema", "true")
+        return reader.parquet(*paths)
+
+    def _schema(self, snap: dict | None) -> StructType | None:
+        """Table schema as of ``snap``; inferred from its files (once: the
+        next commit writes it) when the manifest predates the key."""
+        if snap is None:
+            return None
+        if "schema" in snap:
+            return StructType.fromJson(snap["schema"])
+        paths = sorted({p for plist in snap["buckets"].values() for p in plist})
+        return self._scan(snap, paths).schema if paths else None
+
+    def _next_schema(self, parent: dict | None, frame: DataFrame) -> dict:
+        """Manifest schema of a commit writing ``frame`` on ``parent``: the
+        all-nullable by-name union of the parent's schema and the frame's
+        columns, ``__bucket`` dropped. A type clash raises ValueError
+        before anything is written or committed."""
+        written = _nullable(StructType([f for f in frame.schema if f.name != _BUCKET_COL]))
+        base = self._schema(parent)
+        return (written if base is None else _union_type(base, written)).jsonValue()
 
     def read(
         self, buckets: Sequence[int] | None = None, as_of: int | None = None
@@ -646,19 +692,15 @@ class MergeTable:
         """Current table state (snapshot-consistent). In MOR mode (any
         bucket holding delta files) superseded versions are resolved here.
 
-        ``buckets`` prunes the scan to the given bucket ids — the
-        lookup-side optimization for read-modify-write accumulates: a cycle
-        touching k of N buckets reads k/N of the table, not all of it.
+        ``buckets`` prunes the scan to the given bucket ids: a
+        read-modify-write cycle touching k of N buckets reads k/N of the
+        table.
 
         ``as_of`` time-travels: read the table exactly as snapshot
-        ``as_of`` committed it (a retained snapshot's file list IS that
-        historical state — superseded files stay on disk until
-        ``expire_snapshots`` reclaims them, which bounds the horizon)."""
+        ``as_of`` committed it, with that snapshot's schema (retained
+        until ``expire_snapshots`` reclaims it)."""
         snap = self.current_snapshot() if as_of is None else self.snapshot_at(as_of)
-        if snap is None or not any(snap["buckets"].values()):
-            schema = ", ".join(f"`{k}` string" for k in self.merge_keys)
-            return self.spark.createDataFrame([], schema)
-        wanted = (
+        wanted = {} if snap is None else (
             snap["buckets"]
             if buckets is None
             else {str(b): snap["buckets"].get(str(b), []) for b in buckets}
@@ -667,30 +709,34 @@ class MergeTable:
         if not paths:
             schema = ", ".join(f"`{k}` string" for k in self.merge_keys)
             return self.spark.createDataFrame([], schema)
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        df = self._scan(snap, paths)
         if _SNAP_COL not in df.columns:
             return self._drop_tombstones(df)  # legacy files
         if any(len(v) > 1 for v in wanted.values()):
-            df = df.withColumn(_BUCKET_COL, self._bucket_expr(df))
-            df = self._resolve_winners(df)
+            df = self._resolve_winners(df.withColumn(_BUCKET_COL, self._bucket))
         return self._drop_tombstones(df.drop(_SNAP_COL))
+
+    @cached_property
+    def _delete_col(self) -> Column:
+        return F.coalesce(F.expr(self.delete_where), F.lit(False))
 
     def _delete_pred(self, df: DataFrame):
         """``delete_where`` as a null-safe boolean Column bound to ``df``,
         or None when ``df`` carries no binding for it (pre-evolution files
         read the op column as absent — nothing can be a tombstone yet).
-        Only AnalysisException falls back; execution errors and type errors
-        propagate loudly, and ALL three consumers (read, changes_since,
-        purge) degrade identically instead of one raising and two
-        swallowing (round-3 advice)."""
+        Only AnalysisException falls back; other errors propagate, and all
+        three consumers (read, changes_since, purge) degrade identically.
+        The analysis probe runs once per schema."""
         if self.delete_where is None:
             return None
-        pred = F.coalesce(F.expr(self.delete_where), F.lit(False))
-        try:
-            df.select(pred)  # analysis-only probe: no job runs
-        except AnalysisException:
-            return None
-        return pred
+        schema = df.schema
+        if schema not in self._delete_binds:
+            try:
+                df.select(self._delete_col)  # analysis-only probe: no job runs
+                self._delete_binds[schema] = True
+            except AnalysisException:
+                self._delete_binds[schema] = False
+        return self._delete_col if self._delete_binds[schema] else None
 
     def _drop_tombstones(self, df: DataFrame) -> DataFrame:
         """Hide CDC-deleted rows from the visible state (see delete_where).
@@ -702,11 +748,8 @@ class MergeTable:
 
     def _snapshot_dir_id(self, path: str) -> int:
         """Snapshot id that wrote a data path, parsed from the path segment
-        DIRECTLY UNDER the table's data dir. (A leftmost regex over the
-        absolute path misparses table roots that themselves contain an
-        ``/s<digits>…/`` segment — e.g. ``/mnt/s3-cache/…`` — resolving
-        every file to the root's number and silently emptying
-        ``changes_since``; round-3 advice.) Unparseable paths return a
+        DIRECTLY UNDER the table's data dir (a table root like
+        ``/mnt/s3-cache/…`` must not parse). Unparseable paths return a
         +inf sentinel so pruning degrades to scanning, never to dropping
         changes."""
         data_root = os.path.normpath(os.path.join(self.root, "data"))
@@ -723,12 +766,10 @@ class MergeTable:
         INCLUDED here — downstream consumers must see deletes — unlike
         ``read()``, which hides them).
 
-        ``as_of`` pins the read to a specific retained snapshot, giving a
-        closed range (snapshot_id, as_of] — the consumer-side contract
-        ``CdcRelay`` needs (it names each shipped delta by the snapshot it
-        read; an unpinned read could include rows from commits that land
-        mid-poll and double-ship them; round-3 advice). Default: the
-        current snapshot.
+        ``as_of`` pins the read to a retained snapshot, giving a closed
+        range (snapshot_id, as_of] — what ``CdcRelay`` needs so commits
+        landing mid-poll are not double-shipped. Default: the current
+        snapshot.
 
         Works because every row persists the snapshot id that wrote it
         (``__snap``), and winner resolution keeps the winner's own id: a
@@ -738,25 +779,19 @@ class MergeTable:
         cost scales with changed buckets, not table size.
         """
         snap = self.current_snapshot() if as_of is None else self.snapshot_at(as_of)
-        empty_schema = ", ".join(f"`{k}` string" for k in self.merge_keys)
-        if snap is None or snapshot_id >= snap["id"]:
-            return self.spark.createDataFrame([], empty_schema + ", `_change_type` string")
-
         # bucket pruning: a bucket can only hold post-sid winners if SOME
         # of its files were written after sid (conservative for -compact
         # dirs, whose rows keep their original __snap)
-        wanted = {
-            b: plist
-            for b, plist in snap["buckets"].items()
+        paths = [] if snap is None or snapshot_id >= snap["id"] else sorted({
+            p for plist in snap["buckets"].values()
             if any(self._snapshot_dir_id(p) > snapshot_id for p in plist)
-        }
-        paths = sorted({p for plist in wanted.values() for p in plist})
-        if not paths:
-            return self.spark.createDataFrame([], empty_schema + ", `_change_type` string")
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        if _SNAP_COL not in df.columns:
-            return self.spark.createDataFrame([], empty_schema + ", `_change_type` string")
-        df = df.withColumn(_BUCKET_COL, self._bucket_expr(df))
+            for p in plist
+        })
+        df = self._scan(snap, paths) if paths else None
+        if df is None or _SNAP_COL not in df.columns:
+            cols = [*self.merge_keys, "_change_type"]
+            return self.spark.createDataFrame([], ", ".join(f"`{k}` string" for k in cols))
+        df = df.withColumn(_BUCKET_COL, self._bucket)
         out = self._resolve_winners(df).filter(F.col(_SNAP_COL) > snapshot_id)
         is_del = self._delete_pred(out)
         if is_del is None:
@@ -777,10 +812,9 @@ class MergeTable:
         carry a lower-seq row for its key — otherwise that late row would
         resurrect the key.
 
-        Rewrites only the buckets that actually hold purgeable tombstones
-        (resolving winners first, so this doubles as a compaction of those
-        buckets' delta chains in MOR mode) and commits a new snapshot;
-        ``expire_snapshots`` reclaims the superseded files.
+        Rewrites only the buckets holding purgeable tombstones (resolving
+        winners first: a compaction of their MOR delta chains too) and
+        commits a new snapshot.
         """
         if self.delete_where is None:
             raise ValueError("purge_tombstones requires delete_where")
@@ -792,22 +826,16 @@ class MergeTable:
         paths = sorted({p for plist in snap["buckets"].values() for p in plist})
         if not paths:
             return stats
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        df = self._scan(snap, paths)
         if _SNAP_COL not in df.columns:
             return stats
-        df = df.withColumn(_BUCKET_COL, self._bucket_expr(df))
+        df = df.withColumn(_BUCKET_COL, self._bucket)
         is_del = self._delete_pred(df)
         if is_del is None:
             return stats  # no file carries the op column yet: no tombstones
         purgeable = is_del & (F.col(self.order_col) < F.lit(below_seq))
         # bounded collect: at most n_buckets rows
-        hit = (
-            df.filter(purgeable)
-            .select(_BUCKET_COL)
-            .groupBy(_BUCKET_COL)
-            .count()
-            .collect()
-        )
+        hit = df.filter(purgeable).groupBy(_BUCKET_COL).count().collect()
         if not hit:
             return stats
         touched = sorted(int(r[0]) for r in hit)
@@ -815,6 +843,7 @@ class MergeTable:
         next_id = snap["id"] + 1
         sub = df.filter(F.col(_BUCKET_COL).isin(touched))
         rewritten = self._resolve_winners(sub).filter(~purgeable)
+        schema = self._next_schema(snap, rewritten)
         out_dir = os.path.join(self.root, "data", f"s{next_id:06d}-purge-{self._attempt_token()}")
         rewritten.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(out_dir)
         new_buckets = dict(snap["buckets"])
@@ -822,7 +851,9 @@ class MergeTable:
             bpath = os.path.join(out_dir, f"{_BUCKET_COL}={b}")
             new_buckets[str(b)] = [bpath] if os.path.exists(bpath) else []
         snapshot = dict(snap)
-        snapshot.update({"id": next_id, "parent": snap["id"], "buckets": new_buckets})
+        snapshot.update(
+            {"id": next_id, "parent": snap["id"], "buckets": new_buckets, "schema": schema}
+        )
         try:
             self._commit(snapshot)
         except CommitConflict:
@@ -849,20 +880,14 @@ class MergeTable:
 
     def touched_buckets(self, df: DataFrame) -> list[int]:
         """Bucket ids a batch's keys hash into (column-pruned aggregate)."""
-        rows = (
-            df.select(self._bucket_expr(df).alias(_BUCKET_COL))
-            .distinct()
-            .collect()
-        )
+        rows = df.select(self._bucket.alias(_BUCKET_COL)).distinct().collect()
         return sorted(int(r[0]) for r in rows)
 
     def latest_state(self, keys: Sequence[str] | None = None) -> DataFrame:
         """Latest row per (sub)key by order_col — the 'current file content'
         view (the reference's wallet/token current-state collections).
         Defaults to the table's own merge keys minus the last (version)
-        component, tie-broken by the remaining merge-key columns — so a
-        table opened via ``MergeTable.open`` gets a correct view without
-        the caller hard-coding repo/path/commit."""
+        component, tie-broken by the remaining merge-key columns."""
         if keys is None:
             keys = self.merge_keys[:-1] if len(self.merge_keys) > 1 else self.merge_keys
         tie = [F.col(c).desc() for c in self.merge_keys if c not in keys]
@@ -888,11 +913,9 @@ class MergeTable:
         ``conflict_retries``: how many times to redo the merge against a
         freshly-read base when another writer commits first
         (``CommitConflict``). Each retry recomputes winner resolution
-        against the new current snapshot — an OCC loser can NEVER just
-        re-point its stale files (they resolved against superseded state) —
-        and the losing attempt's data dirs are reclaimed eagerly. Default 0
-        (single-writer replay/stream paths surface the conflict loudly);
-        concurrent multi-writer ingest passes a small positive number.
+        against the new snapshot (an OCC loser's files resolved against
+        superseded state), and the losing attempt's dirs are reclaimed
+        eagerly. Default 0: single-writer paths surface the conflict.
         """
         attempt = 0
         while True:
@@ -916,23 +939,17 @@ class MergeTable:
 
         # 1. light pass — only a CoW merge into a table with files needs the
         #    touched buckets BEFORE the main pass (to union their existing
-        #    rows). One column-pruned aggregation (only the merge-key
-        #    columns are evaluated; Catalyst prunes the heavy normalize
-        #    expressions upstream); partial map-side combine means only
-        #    ~n_buckets rows ever shuffle. A MOR merge only appends and an
-        #    empty table has nothing to union: both count rows_in with an
-        #    Observation on the main pass and read the touched buckets off
-        #    the written bucket dirs.
+        #    rows): one column-pruned aggregation of ~n_buckets rows. A MOR
+        #    merge only appends and an empty table has nothing to union:
+        #    both count rows_in with an Observation on the main pass and
+        #    read the touched buckets off the written bucket dirs.
         old_buckets: dict[str, list[str]] = dict(snap["buckets"]) if snap else {}
         mor_append = self.mode == "mor"
         light_pass = not mor_append and any(old_buckets.values())
         existing_paths: list[str] = []
         if light_pass:
             bucket_stats = (
-                batch.select(self._bucket_expr(batch).alias(_BUCKET_COL))
-                .groupBy(_BUCKET_COL)
-                .count()
-                .collect()
+                batch.select(self._bucket.alias(_BUCKET_COL)).groupBy(_BUCKET_COL).count().collect()
             )
             touched = sorted(int(r[0]) for r in bucket_stats)
             rows_in = int(sum(r[1] for r in bucket_stats))
@@ -941,16 +958,12 @@ class MergeTable:
         # 2. main pass — ONE shuffle, ONE sort: in-batch dedup and
         #    resolve-vs-existing are the same rule (latest order_col wins,
         #    incoming beats existing on ties — CDC replace_one semantics,
-        #    mongo_db.py:72-83), so both collapse into a single window: hash-
-        #    exchange by bucket (write-aligned), sort each partition by
-        #    (bucket, key, order desc, is_new desc), keep the first row of
-        #    every key run via lag(). All rows of a key share its bucket, so
-        #    bucket-partitioning is correct for the per-key window.
-        #    MOR mode skips the union entirely: only the deduped batch is
-        #    written (as a delta per bucket) and supersession is left to
-        #    read-time resolution — merge cost O(batch), not O(table).
+        #    mongo_db.py:72-83), so both collapse into a single window over
+        #    the bucket exchange (write-aligned; a key never straddles
+        #    buckets). MOR skips the union: the deduped batch is written as a
+        #    delta per bucket and supersession is resolved at read time.
         new_part = (
-            batch.withColumn(_BUCKET_COL, self._bucket_expr(batch))
+            batch.withColumn(_BUCKET_COL, self._bucket)
             .withColumn(_SNAP_COL, F.lit(next_id))
             .withColumn(_IS_NEW_COL, F.lit(1))
         )
@@ -958,19 +971,17 @@ class MergeTable:
             rows_in_obs = Observation()
             new_part = new_part.observe(rows_in_obs, F.count(F.lit(1)).alias("rows_in"))
         if existing_paths:
-            existing = self.spark.read.option("mergeSchema", "true").parquet(*existing_paths)
             # bucket value is derivable from the key; recompute rather
             # than trusting directory names (survives schema drift)
-            existing = existing.withColumn(_BUCKET_COL, self._bucket_expr(existing))
+            existing = self._scan(snap, existing_paths).withColumn(_BUCKET_COL, self._bucket)
             if _SNAP_COL not in existing.columns:
                 existing = existing.withColumn(_SNAP_COL, F.lit(-1))
             existing = existing.withColumn(_IS_NEW_COL, F.lit(0))
             merged = new_part.unionByName(existing, allowMissingColumns=True)
         else:
             merged = new_part
-        resolved = self._resolve_winners(
-            merged, extra_order=(F.col(_IS_NEW_COL).desc(),)
-        ).drop(_IS_NEW_COL)
+        resolved = self._resolve_winners(merged, new_wins_ties=True).drop(_IS_NEW_COL)
+        schema = self._next_schema(snap, resolved)
 
         # 3. write files for touched buckets only; the data is already
         #    exchanged on the bucket column, so partitionBy writes straight
@@ -999,29 +1010,6 @@ class MergeTable:
                     new_buckets[str(b)] = new_buckets.get(str(b), []) + [bpath]
                 else:
                     new_buckets[str(b)] = [bpath]
-
-        # 3b. auto-compaction (MOR): buckets whose delta chain grew past the
-        #     threshold are rewritten to a single winners file inside this
-        #     same commit, bounding read-time resolution cost
-        if mor_append:
-            overlong = {
-                b: fs for b, fs in new_buckets.items() if len(fs) > self.compact_threshold
-            }
-            if overlong:
-                cpaths = sorted({p for fs in overlong.values() for p in fs})
-                cdf = self.spark.read.option("mergeSchema", "true").parquet(*cpaths)
-                cdf = cdf.withColumn(_BUCKET_COL, self._bucket_expr(cdf))
-                if _SNAP_COL not in cdf.columns:
-                    cdf = cdf.withColumn(_SNAP_COL, F.lit(-1))
-                compacted = self._resolve_winners(cdf)
-                cdir = os.path.join(self.root, "data", f"s{next_id:06d}-compact-{self._attempt_token()}")
-                attempt_dirs.append(cdir)
-                compacted.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(cdir)
-                for b in overlong:
-                    bpath = os.path.join(cdir, f"{_BUCKET_COL}={b}")
-                    if os.path.exists(bpath):
-                        new_buckets[b] = [bpath]
-
         snapshot = {
             "id": next_id,
             "parent": snap["id"] if snap else None,
@@ -1032,14 +1020,32 @@ class MergeTable:
             "n_buckets": self.n_buckets,
             "merge_salts": self.merge_salts,
             "delete_where": self.delete_where,
+            "schema": schema,
         }
+
+        # 3b. auto-compaction (MOR): buckets whose delta chain grew past the
+        #     threshold are rewritten to a single winners file inside this
+        #     same commit, bounding read-time resolution cost
+        if mor_append:
+            overlong = {b: fs for b, fs in new_buckets.items() if len(fs) > self.compact_threshold}
+            if overlong:
+                # the snapshot's schema holds __snap: this commit wrote it
+                cpaths = sorted({p for fs in overlong.values() for p in fs})
+                cdf = self._scan(snapshot, cpaths).withColumn(_BUCKET_COL, self._bucket)
+                compacted = self._resolve_winners(cdf)
+                cdir = os.path.join(self.root, "data", f"s{next_id:06d}-compact-{self._attempt_token()}")
+                attempt_dirs.append(cdir)
+                compacted.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(cdir)
+                for b in overlong:
+                    bpath = os.path.join(cdir, f"{_BUCKET_COL}={b}")
+                    if os.path.exists(bpath):
+                        new_buckets[b] = [bpath]
+
         try:
             self._commit(snapshot)
         except CommitConflict:
-            # this attempt lost the OCC race: its files resolved winners
-            # against a superseded base and are referenced by no snapshot
-            # (unique attempt-token dirs) — reclaim them now instead of
-            # waiting for expire_snapshots
+            # lost the OCC race: no snapshot references this attempt's
+            # dirs (they resolved against a superseded base) — reclaim now
             for d in attempt_dirs:
                 shutil.rmtree(d, ignore_errors=True)
             raise
@@ -1047,13 +1053,7 @@ class MergeTable:
             self.expire_snapshots(keep_last=self.auto_expire_keep)
 
         m = MergeMetrics(
-            batch_id,
-            next_id,
-            rows_in,
-            rows_dedup,
-            len(touched),
-            self.n_buckets,
-            time.time() - t0,
+            batch_id, next_id, rows_in, rows_dedup, len(touched), self.n_buckets, time.time() - t0
         )
         self._log_lineage(m)
         return m

@@ -16,7 +16,9 @@ column bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import weakref
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ethereum_etl_spark.functions.hex import hex_to_dec_native
@@ -41,23 +43,39 @@ def normalize_changes(changes: DataFrame, with_decimal_value: bool = True) -> Da
       part_label      — zero-padded partition label (reference zfill(8),
                         export_knowledge_graph_needed_common.py:68-69)
     """
-    value_hex = F.regexp_extract(F.col("content"), _HEX_VALUE_RE, 1)
-    passthrough = [F.col("op")] if "op" in changes.columns else []
-    out = changes.select(
-        *passthrough,
-        F.col("seq"),
-        F.lower(F.col("repo")).alias("repo"),
-        F.col("path"),
-        F.lower(F.col("commit")).alias("commit"),
-        F.col("lang"),
-        clean_content(F.col("content")).alias("content"),
-        F.sha2(F.col("content"), 256).alias("sha256"),
-        F.length(clean_content(F.col("content"))).cast("long").alias("content_size"),
-        token_count(F.col("content")).alias("n_tokens"),
-        F.when(value_hex != "", F.concat(F.lit("0x"), F.lower(value_hex))).alias("value_hex"),
-        (F.col("seq") / 86400).cast("long").alias("day_bucket"),
-        zero_pad(F.col("seq") - (F.col("seq") % 1000), 8).alias("part_label"),
+    cols, value_dec = _projection(
+        changes.sparkSession.sparkContext, "op" in changes.columns
     )
+    out = changes.select(*cols)
     if with_decimal_value:
-        out = out.withColumn("value_dec", hex_to_dec_native(F.col("value_hex")))
+        out = out.withColumn("value_dec", value_dec)
     return out
+
+
+# SparkContext -> {has_op: (projection, value_dec)}. Every F.* call is a few
+# Py4J round trips; a micro-batch loop plans this projection once per cycle,
+# so the Column objects are built once and reused by every batch.
+_PROJECTIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _projection(sc, has_op: bool) -> tuple[list[Column], Column]:
+    built = _PROJECTIONS.setdefault(sc, {})
+    if has_op not in built:
+        value_hex = F.regexp_extract(F.col("content"), _HEX_VALUE_RE, 1)
+        passthrough = [F.col("op")] if has_op else []
+        built[has_op] = ([
+            *passthrough,
+            F.col("seq"),
+            F.lower(F.col("repo")).alias("repo"),
+            F.col("path"),
+            F.lower(F.col("commit")).alias("commit"),
+            F.col("lang"),
+            clean_content(F.col("content")).alias("content"),
+            F.sha2(F.col("content"), 256).alias("sha256"),
+            F.length(clean_content(F.col("content"))).cast("long").alias("content_size"),
+            token_count(F.col("content")).alias("n_tokens"),
+            F.when(value_hex != "", F.concat(F.lit("0x"), F.lower(value_hex))).alias("value_hex"),
+            (F.col("seq") / 86400).cast("long").alias("day_bucket"),
+            zero_pad(F.col("seq") - (F.col("seq") % 1000), 8).alias("part_label"),
+        ], hex_to_dec_native(F.col("value_hex")))
+    return built[has_op]

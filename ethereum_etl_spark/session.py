@@ -13,6 +13,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def _driver_memory() -> str:
+    """``$SPARK_DRIVER_MEMORY``, else half the host's RAM in whole GiB (at
+    least 1g, at most 24g): in local mode the driver heap holds every
+    executor's work, and the rest of RAM is left to the OS page cache and
+    Python."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(max(total // 2**31, 1), 24)}g"
+
+
 def get_spark(
     app_name: str = "ethereum-etl-spark",
     master: str | None = None,
@@ -21,11 +37,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
+    cores this process may run on), the driver heap to
+    ``$SPARK_DRIVER_MEMORY`` (default: half the host's RAM, at most 24g).
     ``shuffle_partitions`` defaults to the core count — on a real cluster
     this would be ~2-3x total executor cores instead.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -43,7 +61,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # local mode: one JVM; driver memory is the only knob that matters
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

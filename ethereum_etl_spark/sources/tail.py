@@ -23,9 +23,11 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # (min seq, max seq) of one log file; (None, None) when it holds no seq
 Bounds = tuple[int | None, int | None]
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _hidden(name: str) -> bool:
@@ -54,11 +56,19 @@ def _data_files(root: str):
                 yield path, (st.st_mtime_ns, st.st_size)
 
 
-def _seq_bounds(path: str) -> Bounds:
+def _footer(path: str) -> tuple[Bounds, tuple]:
     """Seq range of one parquet file from its footer's row-group
-    statistics; a file with a row group lacking min/max stats has its
-    ``seq`` column read instead."""
+    statistics (a file with a row group lacking min/max stats has its
+    ``seq`` column read instead), and a key of everything in the footer
+    Spark's schema inference reads: the parquet schema (its first line is
+    the object's repr) and the Spark schema Spark writes beside it."""
     pf = pq.ParquetFile(path)
+    md = pf.metadata
+    key = (str(md.schema).partition("\n")[2], (md.metadata or {}).get(_SPARK_SCHEMA_KEY))
+    return _seq_range(pf), key
+
+
+def _seq_range(pf: pq.ParquetFile) -> Bounds:
     md = pf.metadata
     col = next(
         (i for i in range(md.num_columns) if md.schema.column(i).path == "seq"), None
@@ -91,8 +101,11 @@ class TailSource:
         self._source = source
         self.lag = lag
         self.batch_size = batch_size
-        # path -> ((mtime_ns, size), seq bounds) for a local path source
-        self._index: dict[str, tuple[tuple[int, int], Bounds]] = {}
+        # path -> ((mtime_ns, size), seq bounds, footer schema key) for a
+        # local path source
+        self._index: dict[str, tuple[tuple[int, int], Bounds, tuple]] = {}
+        # footer schema key -> the Spark schema inferred from such a file
+        self._schemas: dict[tuple, StructType] = {}
 
     def df(self) -> DataFrame:
         if isinstance(self._source, str):
@@ -119,10 +132,10 @@ class TailSource:
         for path, stamp in _data_files(root):
             hit = self._index.get(path)
             if hit is None or hit[0] != stamp:
-                hit = (stamp, _seq_bounds(path))
+                hit = (stamp, *_footer(path))
             index[path] = hit
         self._index = index
-        return {p: b for p, (_, b) in index.items()}
+        return {p: b for p, (_, b, _) in index.items()}
 
     def head_seq(self) -> int:
         """Current head of the log (max seq); -1 for an empty log. A local
@@ -149,7 +162,13 @@ class TailSource:
         """Scan of one micro-batch. A local path source reads only the files
         whose seq range overlaps ``[start, end]`` (``basePath`` keeps any
         partition columns); the predicate is pushed into the parquet reader
-        either way (row-group pruning on the seq statistics)."""
+        either way (row-group pruning on the seq statistics).
+
+        Spark infers a scan's schema from the footer of its first file (by
+        path) in a job of its own; when the files sit directly under the
+        root (no partition columns), the schema inferred for a footer like
+        the first file's is passed instead, so only a new footer schema
+        costs that job."""
         pred = (F.col("seq") >= start) & (F.col("seq") <= end)
         root = self._local_root()
         if root is None:
@@ -163,4 +182,13 @@ class TailSource:
         reader = self.spark.read
         if os.path.isdir(root):
             reader = reader.option("basePath", root)
-        return reader.parquet(*files).filter(pred)
+        flat = all(
+            os.path.normpath(os.path.dirname(p)) == os.path.normpath(root) for p in files
+        )
+        key = self._index[files[0]][2] if flat else None
+        if key in self._schemas:
+            reader = reader.schema(self._schemas[key])
+        df = reader.parquet(*files)
+        if key is not None and key not in self._schemas:
+            self._schemas[key] = df.schema
+        return df.filter(pred)

@@ -109,29 +109,31 @@ class TestCatalogLock:
         # no temp litter from the aborted publish
         assert not [f for f in os.listdir(cat.root) if ".tmp-" in f]
 
-    def test_fresh_lock_not_stolen(self, tmp_path):
+    def test_fresh_lock_not_stolen(self, tmp_path, monkeypatch):
         """A recently-touched lock is a live writer: acquisition must time
-        out with CommitConflict, never unlink it."""
-        import threading
+        out with CommitConflict, never unlink it. A fake clock runs the
+        whole 2 x lock_ttl + 5 s wait budget at once; each of its sleeps
+        re-touches the lock, as the live holder would."""
+        from types import SimpleNamespace
+
+        from ethereum_etl_spark.plans import merge as merge_mod
+
         cat = self._catalog(tmp_path, ttl=60.0)
         lock = os.path.join(cat.root, "manifest.lock")
         open(lock, "w").close()  # fresh mtime -> live holder
+        start = os.path.getmtime(lock)
+        now = [start]
 
-        # keep it fresh while the committer spins (its 200 x 50ms retries)
-        stop = threading.Event()
+        def sleep(seconds):
+            now[0] += seconds
+            os.utime(lock, (now[0], now[0]))
 
-        def refresh():
-            while not stop.wait(0.5):
-                os.utime(lock)
-
-        thr = threading.Thread(target=refresh, daemon=True)
-        thr.start()
-        try:
-            with pytest.raises(CommitConflict, match="mid-commit"):
-                cat.commit(self._snap(0, None))
-        finally:
-            stop.set()
-            thr.join()
+        monkeypatch.setattr(
+            merge_mod, "time", SimpleNamespace(time=lambda: now[0], sleep=sleep)
+        )
+        with pytest.raises(CommitConflict, match="mid-commit"):
+            cat.commit(self._snap(0, None))
+        assert now[0] - start >= 2 * 60.0 + 5.0  # the budget was waited out
         assert os.path.exists(lock)  # untouched
         assert cat.current_snapshot() is None
 

@@ -39,13 +39,13 @@ def _head_without_jobs(spark, src):
 def footer_reads(monkeypatch):
     """Paths whose footers the index read, in order."""
     calls = []
-    real = tail._seq_bounds
+    real = tail._footer
 
     def counting(path):
         calls.append(path)
         return real(path)
 
-    monkeypatch.setattr(tail, "_seq_bounds", counting)
+    monkeypatch.setattr(tail, "_footer", counting)
     return calls
 
 
@@ -106,7 +106,7 @@ def test_row_group_without_stats_falls_back_to_reading_seq(spark, tmp_path, foot
     assert st is None or not st.has_min_max  # the fallback is what runs
     src = TailSource(spark, log)
     assert _head_without_jobs(spark, src) == 42
-    assert tail._seq_bounds(nostats) == (17, 42)
+    assert tail._footer(nostats)[0] == (17, 42)
     assert sorted(r["seq"] for r in src.range_df(15, 35).collect()) == [17, 30]
 
 
