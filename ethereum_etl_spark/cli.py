@@ -243,7 +243,7 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"out": args.out}))
     elif args.cmd == "changes-since":
         t = _open_table(spark, args)
-        delta = t.changes_since(args.snapshot, as_of=args.as_of).drop("__bucket")
+        delta = t.changes_since(args.snapshot, as_of=args.as_of)
         delta.write.mode("overwrite").parquet(args.out)
         cur = t.current_snapshot()
         print(json.dumps({

@@ -135,8 +135,10 @@ class SnapshotCatalog:
     -> list of data paths), ``committed_batches``, ``schema`` (the table
     schema as Spark StructType JSON: the all-nullable by-name union of every
     frame committed so far, so scans pass it instead of inferring it from
-    file footers; manifests written before it existed lack it), plus the
-    persisted table config (``merge_keys``, ``order_col``, ``n_buckets``,
+    file footers; manifests written before it existed lack it), ``bounds``
+    (data path -> ``[min, max]`` of ``order_col`` over the write that made
+    it; a path without an entry is unbounded), plus the persisted table
+    config (``merge_keys``, ``order_col``, ``n_buckets``,
     ``merge_salts``, ``delete_where``) that ``MergeTable.open`` reads back.
     """
 
@@ -452,13 +454,6 @@ class MergeTable:
 
     # ---------------- snapshot plumbing (via the catalog) ----------------
 
-    @staticmethod
-    def _attempt_token() -> str:
-        """Per-attempt data-dir suffix: two writers racing the same next_id
-        never write into the same directory; the commit CAS rejects the
-        loser, whose orphan dir ``expire_snapshots`` reclaims."""
-        return uuid.uuid4().hex[:6]
-
     def current_snapshot(self) -> dict | None:
         return self.catalog.current_snapshot()
 
@@ -491,6 +486,21 @@ class MergeTable:
 
     def _commit(self, snapshot: dict) -> None:
         self.catalog.commit(snapshot)
+
+    def _publish(self, snapshot: dict, bounds: dict, attempt_dirs: list[str]) -> None:
+        """Commit ``snapshot`` with the ``bounds`` of the paths it lists,
+        then auto-expire. A CommitConflict loser's dirs resolved against a
+        superseded base and no snapshot references them: reclaim them now."""
+        listed = {p for plist in snapshot["buckets"].values() for p in plist}
+        snapshot["bounds"] = {p: b for p, b in bounds.items() if p in listed}
+        try:
+            self._commit(snapshot)
+        except CommitConflict:
+            for d in attempt_dirs:
+                shutil.rmtree(d, ignore_errors=True)
+            raise
+        if self.auto_expire_keep is not None:
+            self.expire_snapshots(keep_last=self.auto_expire_keep)
 
     def _log_lineage(self, m: MergeMetrics) -> None:
         self.catalog.log_lineage(m.to_dict())
@@ -686,6 +696,32 @@ class MergeTable:
         base = self._schema(parent)
         return (written if base is None else _union_type(base, written)).jsonValue()
 
+    @cached_property
+    def _write_stats(self) -> list[Column]:
+        oc = F.col(self.order_col)
+        return [F.count(F.lit(1)).alias("rows"), F.count(oc).alias("ordered"),
+                F.min(oc).alias("lo"), F.max(oc).alias("hi")]
+
+    def _write_buckets(self, df: DataFrame, name: str, bounds: dict) -> tuple[str, dict, int]:
+        """Write ``df`` partitioned by ``__bucket`` into ``data/<name>-<token>``
+        (racing writers never share a dir); return that dir, {bucket: its
+        dir} and the rows written. An Observation on the write puts its
+        [min, max] of ``order_col`` in ``bounds`` for each dir, with no extra
+        job; a null or non-int/str ``order_col`` leaves them unbounded."""
+        out_dir = os.path.join(self.root, "data", f"{name}-{uuid.uuid4().hex[:6]}")
+        obs = Observation()
+        df = df.observe(obs, *self._write_stats)
+        df.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(out_dir)
+        prefix = f"{_BUCKET_COL}="
+        dirs = {int(d[len(prefix):]): os.path.join(out_dir, d)
+                for d in os.listdir(out_dir) if d.startswith(prefix)}
+        if not dirs:
+            return out_dir, dirs, 0  # an empty write may report no observed metrics
+        m = obs.get
+        if m["ordered"] == m["rows"] and isinstance(m["lo"], (int, str)):
+            bounds.update({p: [m["lo"], m["hi"]] for p in dirs.values()})
+        return out_dir, dirs, int(m["rows"])
+
     def read(
         self, buckets: Sequence[int] | None = None, as_of: int | None = None
     ) -> DataFrame:
@@ -714,7 +750,7 @@ class MergeTable:
             return self._drop_tombstones(df)  # legacy files
         if any(len(v) > 1 for v in wanted.values()):
             df = self._resolve_winners(df.withColumn(_BUCKET_COL, self._bucket))
-        return self._drop_tombstones(df.drop(_SNAP_COL))
+        return self._drop_tombstones(df.drop(_SNAP_COL, _BUCKET_COL))
 
     @cached_property
     def _delete_col(self) -> Column:
@@ -758,6 +794,19 @@ class MergeTable:
         m = re.match(r"s(\d+)(?:-.*)?$", seg)
         return int(m.group(1)) if m else 1 << 62
 
+    def _changed_dirs(self, plist: list[str], snapshot_id: int, bounds: dict) -> list[str]:
+        """The dirs of one bucket that ``changes_since(snapshot_id)`` reads:
+        those written after it, plus each older dir that is unbounded or
+        whose max ``order_col`` reaches the new dirs' smallest min — only
+        such a dir can hold a late or replayed row that beats a newer one."""
+        new = [p for p in plist if self._snapshot_dir_id(p) > snapshot_id]
+        if not new:
+            return []
+        lows = [bounds[p][0] for p in new if p in bounds]
+        floor = min(lows) if len(lows) == len(new) else None
+        return new + [p for p in plist if p not in new and (
+            floor is None or p not in bounds or bounds[p][1] >= floor)]
+
     def changes_since(self, snapshot_id: int, as_of: int | None = None) -> DataFrame:
         """Net row-level changes committed AFTER ``snapshot_id`` — the
         CDC-out / incremental-consumption surface (Iceberg's incremental
@@ -774,25 +823,24 @@ class MergeTable:
         Works because every row persists the snapshot id that wrote it
         (``__snap``), and winner resolution keeps the winner's own id: a
         key's current version carries exactly the snapshot that last
-        changed it. Buckets whose files all predate ``snapshot_id`` are
-        pruned from the scan by path (file dirs are ``s<id>/``), so the
-        cost scales with changed buckets, not table size.
+        changed it. Such a row lives in a dir written after ``snapshot_id``
+        (dirs are ``s<id>/``): each bucket reads those dirs and only the
+        older ones ``_changed_dirs`` keeps, so the cost follows the churn,
+        not the table. Every dir the engine writes is key-unique, so when
+        each bucket reads one dir the winner sort is skipped.
         """
         snap = self.current_snapshot() if as_of is None else self.snapshot_at(as_of)
-        # bucket pruning: a bucket can only hold post-sid winners if SOME
-        # of its files were written after sid (conservative for -compact
-        # dirs, whose rows keep their original __snap)
-        paths = [] if snap is None or snapshot_id >= snap["id"] else sorted({
-            p for plist in snap["buckets"].values()
-            if any(self._snapshot_dir_id(p) > snapshot_id for p in plist)
-            for p in plist
-        })
+        buckets = {} if snap is None or snapshot_id >= snap["id"] else snap["buckets"]
+        picked = [self._changed_dirs(plist, snapshot_id, snap.get("bounds", {}))
+                  for plist in buckets.values()]
+        paths = sorted(p for dirs in picked for p in dirs)
         df = self._scan(snap, paths) if paths else None
         if df is None or _SNAP_COL not in df.columns:
             cols = [*self.merge_keys, "_change_type"]
             return self.spark.createDataFrame([], ", ".join(f"`{k}` string" for k in cols))
-        df = df.withColumn(_BUCKET_COL, self._bucket)
-        out = self._resolve_winners(df).filter(F.col(_SNAP_COL) > snapshot_id)
+        if any(len(dirs) > 1 for dirs in picked):
+            df = self._resolve_winners(df.withColumn(_BUCKET_COL, self._bucket)).drop(_BUCKET_COL)
+        out = df.filter(F.col(_SNAP_COL) > snapshot_id)
         is_del = self._delete_pred(out)
         if is_del is None:
             is_del = F.lit(False)
@@ -821,13 +869,9 @@ class MergeTable:
         t0 = time.time()
         snap = self.current_snapshot()
         stats = {"buckets_rewritten": 0, "tombstones_removed": 0, "snapshot_id": None}
-        if snap is None:
-            return stats
-        paths = sorted({p for plist in snap["buckets"].values() for p in plist})
-        if not paths:
-            return stats
-        df = self._scan(snap, paths)
-        if _SNAP_COL not in df.columns:
+        paths = sorted({p for plist in snap["buckets"].values() for p in plist}) if snap else []
+        df = self._scan(snap, paths) if paths else None
+        if df is None or _SNAP_COL not in df.columns:
             return stats
         df = df.withColumn(_BUCKET_COL, self._bucket)
         is_del = self._delete_pred(df)
@@ -844,38 +888,20 @@ class MergeTable:
         sub = df.filter(F.col(_BUCKET_COL).isin(touched))
         rewritten = self._resolve_winners(sub).filter(~purgeable)
         schema = self._next_schema(snap, rewritten)
-        out_dir = os.path.join(self.root, "data", f"s{next_id:06d}-purge-{self._attempt_token()}")
-        rewritten.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(out_dir)
+        bounds = dict(snap.get("bounds", {}))
+        out_dir, written, _ = self._write_buckets(rewritten, f"s{next_id:06d}-purge", bounds)
         new_buckets = dict(snap["buckets"])
-        for b in touched:
-            bpath = os.path.join(out_dir, f"{_BUCKET_COL}={b}")
-            new_buckets[str(b)] = [bpath] if os.path.exists(bpath) else []
+        new_buckets.update({str(b): [written[b]] if b in written else [] for b in touched})
         snapshot = dict(snap)
-        snapshot.update(
-            {"id": next_id, "parent": snap["id"], "buckets": new_buckets, "schema": schema}
-        )
-        try:
-            self._commit(snapshot)
-        except CommitConflict:
-            # lost the OCC race: no snapshot references this attempt's dir
-            shutil.rmtree(out_dir, ignore_errors=True)
-            raise
+        snapshot.update({"id": next_id, "parent": snap["id"], "buckets": new_buckets,
+                         "schema": schema})
+        self._publish(snapshot, bounds, [out_dir])
         stats["buckets_rewritten"] = len(touched)
         stats["snapshot_id"] = next_id
-        self._log_lineage(
-            MergeMetrics(
-                batch_id=f"purge-below-{below_seq}",
-                snapshot_id=next_id,
-                rows_in=0,
-                rows_after_dedup=0,
-                buckets_touched=len(touched),
-                n_buckets=self.n_buckets,
-                seconds=time.time() - t0,
-                extra={"tombstones_removed": stats["tombstones_removed"]},
-            )
-        )
-        if self.auto_expire_keep is not None:
-            self.expire_snapshots(keep_last=self.auto_expire_keep)
+        self._log_lineage(MergeMetrics(
+            f"purge-below-{below_seq}", next_id, 0, 0, len(touched), self.n_buckets,
+            time.time() - t0, extra={"tombstones_removed": stats["tombstones_removed"]},
+        ))
         return stats
 
     def touched_buckets(self, df: DataFrame) -> list[int]:
@@ -986,30 +1012,19 @@ class MergeTable:
         # 3. write files for touched buckets only; the data is already
         #    exchanged on the bucket column, so partitionBy writes straight
         #    out of the window's partitioning — no second shuffle
-        out_dir = os.path.join(self.root, "data", f"s{next_id:06d}-{self._attempt_token()}")
+        bounds = dict(snap.get("bounds", {})) if snap else {}
+        out_dir, written, rows_dedup = self._write_buckets(resolved, f"s{next_id:06d}", bounds)
         attempt_dirs = [out_dir]
-        obs = Observation()
-        resolved = resolved.observe(obs, F.count(F.lit(1)).alias("rows_out"))
-        resolved.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(out_dir)
         if not light_pass:
             # every batch row has a winner, so the written bucket dirs are
-            # exactly the buckets the batch touches
-            prefix = f"{_BUCKET_COL}="
-            touched = sorted(
-                int(d[len(prefix):]) for d in os.listdir(out_dir) if d.startswith(prefix)
-            )
-            # an empty write may report no observed metrics: skip the wait
+            # exactly the buckets the batch touches; an empty write may
+            # report no observed metrics: skip the wait
+            touched = sorted(written)
             rows_in = int(rows_in_obs.get["rows_in"]) if touched else 0
-        rows_dedup = int(obs.get["rows_out"]) if touched else 0
 
         new_buckets = dict(old_buckets)
-        for b in touched:
-            bpath = os.path.join(out_dir, f"{_BUCKET_COL}={b}")
-            if os.path.exists(bpath):
-                if mor_append:
-                    new_buckets[str(b)] = new_buckets.get(str(b), []) + [bpath]
-                else:
-                    new_buckets[str(b)] = [bpath]
+        for b, bpath in written.items():
+            new_buckets[str(b)] = (new_buckets.get(str(b), []) if mor_append else []) + [bpath]
         snapshot = {
             "id": next_id,
             "parent": snap["id"] if snap else None,
@@ -1026,32 +1041,17 @@ class MergeTable:
         # 3b. auto-compaction (MOR): buckets whose delta chain grew past the
         #     threshold are rewritten to a single winners file inside this
         #     same commit, bounding read-time resolution cost
-        if mor_append:
-            overlong = {b: fs for b, fs in new_buckets.items() if len(fs) > self.compact_threshold}
-            if overlong:
-                # the snapshot's schema holds __snap: this commit wrote it
-                cpaths = sorted({p for fs in overlong.values() for p in fs})
-                cdf = self._scan(snapshot, cpaths).withColumn(_BUCKET_COL, self._bucket)
-                compacted = self._resolve_winners(cdf)
-                cdir = os.path.join(self.root, "data", f"s{next_id:06d}-compact-{self._attempt_token()}")
-                attempt_dirs.append(cdir)
-                compacted.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(cdir)
-                for b in overlong:
-                    bpath = os.path.join(cdir, f"{_BUCKET_COL}={b}")
-                    if os.path.exists(bpath):
-                        new_buckets[b] = [bpath]
+        overlong = [fs for fs in new_buckets.values() if len(fs) > self.compact_threshold]
+        if mor_append and overlong:
+            # the snapshot's schema holds __snap: this commit wrote it
+            cpaths = sorted({p for fs in overlong for p in fs})
+            cdf = self._scan(snapshot, cpaths).withColumn(_BUCKET_COL, self._bucket)
+            cdir, compacted, _ = self._write_buckets(
+                self._resolve_winners(cdf), f"s{next_id:06d}-compact", bounds)
+            attempt_dirs.append(cdir)
+            new_buckets.update({str(b): [p] for b, p in compacted.items()})
 
-        try:
-            self._commit(snapshot)
-        except CommitConflict:
-            # lost the OCC race: no snapshot references this attempt's
-            # dirs (they resolved against a superseded base) — reclaim now
-            for d in attempt_dirs:
-                shutil.rmtree(d, ignore_errors=True)
-            raise
-        if self.auto_expire_keep is not None:
-            self.expire_snapshots(keep_last=self.auto_expire_keep)
-
+        self._publish(snapshot, bounds, attempt_dirs)
         m = MergeMetrics(
             batch_id, next_id, rows_in, rows_dedup, len(touched), self.n_buckets, time.time() - t0
         )

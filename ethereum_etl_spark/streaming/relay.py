@@ -3,8 +3,13 @@
 The ingest side (Streamer -> MergeTable) turns a binlog tail into
 snapshots; this relay turns snapshots back into a change FEED: each poll
 ships the net per-key delta since the persisted cursor (via
-``MergeTable.changes_since``, bucket-pruned — O(churn) per cycle, never a
-table rescan) to a parquet sink, then advances the cursor atomically.
+``MergeTable.changes_since``) to a parquet sink, then advances the cursor
+atomically. Each poll is O(churn), never a table rescan: it reads only the
+data dirs written after the cursor, plus an older dir only when its
+manifest ``order_col`` bounds say it may hold a row that beats a newer one
+(a late or replayed row). On a steady tail that is one dir per bucket, and
+since every dir is key-unique the poll needs no winner sort: scan, filter
+on ``__snap``, write.
 This is how a serving corpus, search index, or replica follows a 100 TB
 table without ever re-reading it (the consumer contract is pinned by
 ``test_incremental_consumer_reconstructs_state``).
@@ -80,7 +85,7 @@ class CdcRelay:
         )
         # pin to the snapshot captured above: rows from commits landing
         # mid-poll belong to the NEXT delta, not this one
-        delta = self.table.changes_since(last, as_of=snap["id"]).drop("__bucket")
+        delta = self.table.changes_since(last, as_of=snap["id"])
         delta.write.mode("overwrite").parquet(dest)
         self._commit_cursor(snap["id"])
         return {"from_snapshot": last, "to_snapshot": snap["id"], "out": dest}

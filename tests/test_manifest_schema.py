@@ -182,7 +182,12 @@ def test_planning_a_cycle_starts_no_job(spark, tmp_path):
     t.merge(normalize_changes(src.range_df(400, 599)), "b1")
     batch = _without_jobs(spark, lambda: src.range_df(600, 799))
     assert batch.count() == 200
-    for build in (t.read, lambda: t.changes_since(0), lambda: t.read(buckets=[1])):
+    # more data dirs than Spark's default parallel-listing threshold (32)
+    wide = MergeTable(spark, str(tmp_path / "wide"), n_buckets=17, mode="mor")
+    for i in range(2):
+        wide.merge(normalize_changes(src.range_df(400 * i, 400 * i + 399)), f"w{i}")
+    assert sum(len(ps) for ps in wide.current_snapshot()["buckets"].values()) > 32
+    for build in (t.read, lambda: t.changes_since(0), lambda: t.read(buckets=[1]), wide.read):
         df = _without_jobs(spark, build)
         assert df.count() > 0
 
