@@ -566,6 +566,17 @@ def _sql_bpe_fold(l: str, r: str, syms: str = "syms") -> str:
     )
 
 
+def _sql_bpe_apply(i: int, src: str, cols: str) -> str:
+    """SELECT of ``cols`` from ``src`` with round ``i``'s merge folded into
+    ``syms``. A round that learned no merge (``m{i}`` empty: no pair is
+    left, where ``train_bpe`` stops early) passes ``syms`` through."""
+    return (
+        f"SELECT {cols}, CASE WHEN m.l IS NULL THEN syms "
+        f"ELSE {_sql_bpe_fold('m.l', 'm.r')} END AS syms "
+        f"FROM {src} LEFT JOIN m{i} m ON true"
+    )
+
+
 def _sql_bpe_train_ctes(k: int) -> str:
     """CTE chain replaying ``train_bpe(bpe_word_table(documents), k)``:
     w0 = the (word, freq, char-syms) dictionary, then per round i the
@@ -591,10 +602,7 @@ def _sql_bpe_train_ctes(k: int) -> str:
             f"m{i} AS (SELECT l, r, n FROM p{i} ORDER BY n DESC, l, r LIMIT 1)"
         )
         if i < k:
-            parts.append(
-                f"w{i} AS (SELECT word, freq, {_sql_bpe_fold('m.l', 'm.r')} "
-                f"AS syms FROM w{i - 1}, m{i} m)"
-            )
+            parts.append(f"w{i} AS ({_sql_bpe_apply(i, f'w{i - 1}', 'word, freq')})")
     return ",\n            ".join(parts)
 
 
@@ -610,10 +618,7 @@ def _sql_bpe_encode_ctes(k: int) -> str:
         "ELSE [word] END AS syms FROM (SELECT DISTINCT word FROM toks))",
     ]
     for i in range(1, k + 1):
-        parts.append(
-            f"d{i} AS (SELECT word, {_sql_bpe_fold('m.l', 'm.r')} AS syms "
-            f"FROM d{i - 1}, m{i} m)"
-        )
+        parts.append(f"d{i} AS ({_sql_bpe_apply(i, f'd{i - 1}', 'word')})")
     return ",\n            ".join(parts)
 
 
@@ -1904,7 +1909,7 @@ def q_cdc_replay_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay_range(spark, changes, table, 0, n - 1, partition_size=2500)
     # replay idempotence: merging an already-committed range changes nothing
     replay_range(spark, changes, table, 0, 2499, partition_size=2500)
-    return table.read().drop("__bucket").withColumn(
+    return table.read().withColumn(
         "value_dec", F.col("value_dec").cast("string")
     )
 
@@ -1929,7 +1934,7 @@ def q_cdc_delete_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, changes, table, 0, 2499, partition_size=2500,
         batch_prefix="late",
     )
-    return table.read().drop("__bucket").withColumn(
+    return table.read().withColumn(
         "value_dec", F.col("value_dec").cast("string")
     )
 
@@ -1947,7 +1952,7 @@ def q_cdc_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = MergeTable(spark, root, n_buckets=8, delete_where="op = 'd'")
     replay_range(spark, changes, table, 0, 2499)          # -> snapshot 0
     replay_range(spark, changes, table, 2500, n - 1)      # -> snapshot 1
-    return table.changes_since(0).drop("__bucket").withColumn(
+    return table.changes_since(0).withColumn(
         "value_dec", F.col("value_dec").cast("string")
     )
 
@@ -2000,7 +2005,7 @@ def q_cdc_purged_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay_range(spark, changes, table, 0, n - 1, partition_size=2500)
     stats = table.purge_tombstones(below_seq=n)  # watermark = log head
     assert stats["tombstones_removed"] > 0, "purge was a no-op; query is vacuous"
-    return table.read().drop("__bucket").withColumn(
+    return table.read().withColumn(
         "value_dec", F.col("value_dec").cast("string")
     )
 
@@ -2019,7 +2024,7 @@ def q_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = MergeTable(spark, root, n_buckets=8)
     replay_range(spark, changes, table, 0, 2499)          # -> snapshot 0
     replay_range(spark, changes, table, 2500, n - 1)      # -> snapshot 1
-    return table.read(as_of=0).drop("__bucket").withColumn(
+    return table.read(as_of=0).withColumn(
         "value_dec", F.col("value_dec").cast("string")
     )
 
@@ -2041,7 +2046,7 @@ def q_incremental_corpus_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = MergeTable(spark, root, n_buckets=8, delete_where="op = 'd'")
     replay_range(spark, changes, table, 0, 2499)          # -> snapshot 0
     replay_range(spark, changes, table, 2500, n - 1)      # -> snapshot 1
-    delta = table.changes_since(0).drop("__bucket")
+    delta = table.changes_since(0)
     ups = (
         delta.filter(F.col("_change_type") == "upsert")
         .filter(F.col("n_tokens") >= 5)
@@ -2092,7 +2097,7 @@ def q_reorg_reexport(spark: SparkSession, sf_dir: str) -> DataFrame:
     fork_seq = find_divergence_seq(table, canonical, probe_from=3000)
     assert fork_seq == fork, f"divergence detector found {fork_seq}, expected {fork}"
     reexport_range(spark, canonical, table, fork_seq, n - 1)
-    return table.read().drop("__bucket").withColumn(
+    return table.read().withColumn(
         "value_dec", F.col("value_dec").cast("string")
     )
 
@@ -2144,7 +2149,7 @@ def q_cdc_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     s1.run_until_head(max_cycles=2)  # "crash" after 2 micro-batches
     s2 = Streamer(spark, src, table, ckpt)  # resume from checkpoint
     s2.run_until_head()
-    return table.read().drop("__bucket").withColumn(
+    return table.read().withColumn(
         "value_dec", F.col("value_dec").cast("string")
     )
 

@@ -57,7 +57,6 @@ class CommitConflict(RuntimeError):
 
 
 _BUCKET_COL = "__bucket"
-_IS_NEW_COL = "__is_new"
 _RN_COL = "__rn"
 _SNAP_COL = "__snap"
 
@@ -630,13 +629,17 @@ class MergeTable:
     def _bucket(self) -> Column:
         return F.pmod(F.xxhash64(*[F.col(k) for k in self.merge_keys]), F.lit(self.n_buckets))
 
-    def _first_of_key(self, *extra_order: Column) -> Column:
+    @cached_property
+    def _winner(self) -> Column:
         """True on the first row of every merge-key run, ordered by (keys,
-        order_col desc, __snap desc, extras) within the bucket partition.
-        With merge_salts > 1 the partitioning is (bucket, key-salt): a
-        second, independent hash of the merge key (seeded so it does not
-        correlate with the bucket hash), so every row of a key maps to one
-        salt and keys never straddle partitions."""
+        order_col desc, __snap desc) within the bucket partition. An
+        incoming batch carries the next snapshot id as ``__snap``, above
+        every committed row's, so it wins ``order_col`` ties: the CDC
+        ``replace_one`` semantic (mongo_db.py:72-83). With merge_salts > 1
+        the partitioning is (bucket, key-salt): a second, independent hash
+        of the merge key (seeded so it does not correlate with the bucket
+        hash), so every row of a key maps to one salt and keys never
+        straddle partitions."""
         parts = [F.col(_BUCKET_COL)]
         if self.merge_salts > 1:
             parts.append(F.pmod(
@@ -645,26 +648,47 @@ class MergeTable:
             ))
         snap_ord = F.coalesce(F.col(_SNAP_COL), F.lit(-1)).desc()
         w = Window.partitionBy(*parts).orderBy(
-            *self.merge_keys, F.col(self.order_col).desc(), snap_ord, *extra_order
+            *self.merge_keys, F.col(self.order_col).desc(), snap_ord
         )
         key_struct = F.struct(*[F.col(k) for k in self.merge_keys])
         prev_key = F.lag(key_struct).over(w)
         return prev_key.isNull() | (prev_key != key_struct)
 
-    @cached_property
-    def _winner(self) -> Column:
-        return self._first_of_key()
+    def _resolve_winners(self, df: DataFrame) -> DataFrame:
+        """Latest row per merge key in ONE bucket-partitioned sort: keep
+        the first row of every key run."""
+        return df.withColumn(_RN_COL, self._winner).filter(_RN_COL).drop(_RN_COL)
 
-    @cached_property
-    def _new_winner(self) -> Column:
-        """``_winner`` with incoming rows beating existing ones on ties."""
-        return self._first_of_key(F.col(_IS_NEW_COL).desc())
+    def _winners(
+        self, snap: dict | None, dirs: Sequence[Sequence[str]], batch: DataFrame | None = None
+    ) -> DataFrame | None:
+        """Latest row per merge key, with ``__bucket``, over the data dirs
+        of ``snap`` in ``dirs`` (one list per bucket) plus an incoming
+        ``batch`` that already carries its ``__snap``; None when there is
+        nothing to read. Files without ``__snap`` are legacy: their rows
+        rank below every row the engine wrote since. Every dir the engine
+        writes is key-unique, so the winner sort runs only when a bucket
+        reads two dirs or a batch joins them."""
+        parts = [] if batch is None else [batch]
+        paths = sorted({p for plist in dirs for p in plist})
+        if paths:
+            df = self._scan(snap, paths)
+            parts.append(df if _SNAP_COL in df.columns else df.withColumn(_SNAP_COL, F.lit(-1)))
+        if not parts:
+            return None
+        # bucket value is derivable from the key; recompute rather than
+        # trusting directory names (survives schema drift)
+        df, *rest = [p.withColumn(_BUCKET_COL, self._bucket) for p in parts]
+        for other in rest:
+            df = df.unionByName(other, allowMissingColumns=True)
+        if batch is None and all(len(plist) <= 1 for plist in dirs):
+            return df
+        return self._resolve_winners(df)
 
-    def _resolve_winners(self, df: DataFrame, new_wins_ties: bool = False) -> DataFrame:
-        """Latest row per merge key in ONE bucket-partitioned sort (see
-        merge() §2): keep the first row of every key run."""
-        first = self._new_winner if new_wins_ties else self._winner
-        return df.withColumn(_RN_COL, first).filter(_RN_COL).drop(_RN_COL)
+    def _no_rows(self, cols: Sequence[str]) -> DataFrame:
+        """An empty frame of string columns ``cols``: what a read returns
+        when there is no file to scan."""
+        return self.spark.createDataFrame([], ", ".join(f"`{c}` string" for c in cols))
 
     def _scan(self, snap: dict, paths: Sequence[str]) -> DataFrame:
         """Data files ``paths`` of snapshot ``snap``, read with the schema
@@ -722,6 +746,44 @@ class MergeTable:
             bounds.update({p: [m["lo"], m["hi"]] for p in dirs.values()})
         return out_dir, dirs, int(m["rows"])
 
+    def _rewrite(self, snap: dict | None, buckets: Iterable[int | str], name: str, bounds: dict,
+                 batch: DataFrame | None = None, keep: Column | None = None) -> tuple:
+        """Write the winners of ``buckets``' dirs in ``snap`` plus
+        ``batch``, less the rows ``keep`` rejects, into one new data dir
+        (see ``_write_buckets``). Returns that dir, the bucket lists it
+        replaces (a rewritten bucket left with no row maps to ``[]``), the
+        rows written and the manifest schema. The schema comes first: a
+        type clash fails before anything is written."""
+        buckets = [str(b) for b in buckets]
+        df = self._winners(snap, [snap["buckets"].get(b, []) for b in buckets], batch)
+        if keep is not None:
+            df = df.filter(keep)
+        schema = self._next_schema(snap, df)
+        out_dir, written, rows = self._write_buckets(df, name, bounds)
+        replaced = {b: [] for b in buckets} | {str(b): [p] for b, p in written.items()}
+        return out_dir, replaced, rows, schema
+
+    def _manifest(self, snap: dict | None, buckets: dict, schema: dict, batch_id=None) -> dict:
+        """The snapshot after ``snap`` (None: the first) listing
+        ``buckets`` with ``schema``, with ``batch_id`` added to the
+        committed batches and the table config persisted for ``open``.
+        ``_publish`` adds the bounds."""
+        batches = set(snap["committed_batches"]) if snap else set()
+        if batch_id is not None:
+            batches.add(batch_id)
+        return {
+            "id": snap["id"] + 1 if snap else 0,
+            "parent": snap["id"] if snap else None,
+            "buckets": buckets,
+            "committed_batches": sorted(batches),
+            "merge_keys": self.merge_keys,
+            "order_col": self.order_col,
+            "n_buckets": self.n_buckets,
+            "merge_salts": self.merge_salts,
+            "delete_where": self.delete_where,
+            "schema": schema,
+        }
+
     def read(
         self, buckets: Sequence[int] | None = None, as_of: int | None = None
     ) -> DataFrame:
@@ -741,15 +803,9 @@ class MergeTable:
             if buckets is None
             else {str(b): snap["buckets"].get(str(b), []) for b in buckets}
         )
-        paths = sorted({p for plist in wanted.values() for p in plist})
-        if not paths:
-            schema = ", ".join(f"`{k}` string" for k in self.merge_keys)
-            return self.spark.createDataFrame([], schema)
-        df = self._scan(snap, paths)
-        if _SNAP_COL not in df.columns:
-            return self._drop_tombstones(df)  # legacy files
-        if any(len(v) > 1 for v in wanted.values()):
-            df = self._resolve_winners(df.withColumn(_BUCKET_COL, self._bucket))
+        df = self._winners(snap, list(wanted.values()))
+        if df is None:
+            return self._no_rows(self.merge_keys)
         return self._drop_tombstones(df.drop(_SNAP_COL, _BUCKET_COL))
 
     @cached_property
@@ -833,14 +889,10 @@ class MergeTable:
         buckets = {} if snap is None or snapshot_id >= snap["id"] else snap["buckets"]
         picked = [self._changed_dirs(plist, snapshot_id, snap.get("bounds", {}))
                   for plist in buckets.values()]
-        paths = sorted(p for dirs in picked for p in dirs)
-        df = self._scan(snap, paths) if paths else None
-        if df is None or _SNAP_COL not in df.columns:
-            cols = [*self.merge_keys, "_change_type"]
-            return self.spark.createDataFrame([], ", ".join(f"`{k}` string" for k in cols))
-        if any(len(dirs) > 1 for dirs in picked):
-            df = self._resolve_winners(df.withColumn(_BUCKET_COL, self._bucket)).drop(_BUCKET_COL)
-        out = df.filter(F.col(_SNAP_COL) > snapshot_id)
+        df = self._winners(snap, picked)
+        if df is None:
+            return self._no_rows([*self.merge_keys, "_change_type"])
+        out = df.drop(_BUCKET_COL).filter(F.col(_SNAP_COL) > snapshot_id)
         is_del = self._delete_pred(out)
         if is_del is None:
             is_del = F.lit(False)
@@ -860,9 +912,10 @@ class MergeTable:
         carry a lower-seq row for its key — otherwise that late row would
         resurrect the key.
 
-        Rewrites only the buckets holding purgeable tombstones (resolving
-        winners first: a compaction of their MOR delta chains too) and
-        commits a new snapshot.
+        Rewrites only the buckets holding purgeable tombstones, from their
+        own files (resolving winners first where a bucket holds more than
+        one dir: a compaction of its MOR delta chain too), and commits a
+        new snapshot.
         """
         if self.delete_where is None:
             raise ValueError("purge_tombstones requires delete_where")
@@ -871,43 +924,35 @@ class MergeTable:
         stats = {"buckets_rewritten": 0, "tombstones_removed": 0, "snapshot_id": None}
         paths = sorted({p for plist in snap["buckets"].values() for p in plist}) if snap else []
         df = self._scan(snap, paths) if paths else None
-        if df is None or _SNAP_COL not in df.columns:
-            return stats
-        df = df.withColumn(_BUCKET_COL, self._bucket)
-        is_del = self._delete_pred(df)
+        is_del = None if df is None else self._delete_pred(df)
         if is_del is None:
             return stats  # no file carries the op column yet: no tombstones
         purgeable = is_del & (F.col(self.order_col) < F.lit(below_seq))
-        # bounded collect: at most n_buckets rows
-        hit = df.filter(purgeable).groupBy(_BUCKET_COL).count().collect()
+        hit = self._bucket_counts(df.filter(purgeable))
         if not hit:
             return stats
-        touched = sorted(int(r[0]) for r in hit)
-        stats["tombstones_removed"] = int(sum(r[1] for r in hit))
         next_id = snap["id"] + 1
-        sub = df.filter(F.col(_BUCKET_COL).isin(touched))
-        rewritten = self._resolve_winners(sub).filter(~purgeable)
-        schema = self._next_schema(snap, rewritten)
         bounds = dict(snap.get("bounds", {}))
-        out_dir, written, _ = self._write_buckets(rewritten, f"s{next_id:06d}-purge", bounds)
-        new_buckets = dict(snap["buckets"])
-        new_buckets.update({str(b): [written[b]] if b in written else [] for b in touched})
-        snapshot = dict(snap)
-        snapshot.update({"id": next_id, "parent": snap["id"], "buckets": new_buckets,
-                         "schema": schema})
-        self._publish(snapshot, bounds, [out_dir])
-        stats["buckets_rewritten"] = len(touched)
-        stats["snapshot_id"] = next_id
+        out_dir, replaced, _, schema = self._rewrite(
+            snap, sorted(hit), f"s{next_id:06d}-purge", bounds, keep=~purgeable)
+        self._publish(self._manifest(snap, snap["buckets"] | replaced, schema), bounds, [out_dir])
+        stats.update(buckets_rewritten=len(hit), tombstones_removed=sum(hit.values()),
+                     snapshot_id=next_id)
         self._log_lineage(MergeMetrics(
-            f"purge-below-{below_seq}", next_id, 0, 0, len(touched), self.n_buckets,
+            f"purge-below-{below_seq}", next_id, 0, 0, len(hit), self.n_buckets,
             time.time() - t0, extra={"tombstones_removed": stats["tombstones_removed"]},
         ))
         return stats
 
+    def _bucket_counts(self, df: DataFrame) -> dict[int, int]:
+        """Rows of ``df`` per bucket its keys hash into: one column-pruned
+        aggregate, at most ``n_buckets`` rows collected."""
+        rows = df.select(self._bucket.alias(_BUCKET_COL)).groupBy(_BUCKET_COL).count().collect()
+        return {int(r[0]): int(r[1]) for r in rows}
+
     def touched_buckets(self, df: DataFrame) -> list[int]:
-        """Bucket ids a batch's keys hash into (column-pruned aggregate)."""
-        rows = df.select(self._bucket.alias(_BUCKET_COL)).distinct().collect()
-        return sorted(int(r[0]) for r in rows)
+        """Bucket ids a batch's keys hash into."""
+        return sorted(self._bucket_counts(df))
 
     def latest_state(self, keys: Sequence[str] | None = None) -> DataFrame:
         """Latest row per (sub)key by order_col — the 'current file content'
@@ -955,105 +1000,57 @@ class MergeTable:
     def _merge_once(self, batch: DataFrame, batch_id: str) -> MergeMetrics:
         t0 = time.time()
         snap = self.current_snapshot()
-        committed = set(snap["committed_batches"]) if snap else set()
-        next_id = (snap["id"] + 1) if snap else 0
-
-        if batch_id in committed:
+        if snap and batch_id in snap["committed_batches"]:
             m = MergeMetrics(batch_id, snap["id"], 0, 0, 0, self.n_buckets, time.time() - t0, noop=True)
             self._log_lineage(m)
             return m
-
-        # 1. light pass — only a CoW merge into a table with files needs the
-        #    touched buckets BEFORE the main pass (to union their existing
-        #    rows): one column-pruned aggregation of ~n_buckets rows. A MOR
-        #    merge only appends and an empty table has nothing to union:
-        #    both count rows_in with an Observation on the main pass and
-        #    read the touched buckets off the written bucket dirs.
+        next_id = (snap["id"] + 1) if snap else 0
         old_buckets: dict[str, list[str]] = dict(snap["buckets"]) if snap else {}
         mor_append = self.mode == "mor"
-        light_pass = not mor_append and any(old_buckets.values())
-        existing_paths: list[str] = []
-        if light_pass:
-            bucket_stats = (
-                batch.select(self._bucket.alias(_BUCKET_COL)).groupBy(_BUCKET_COL).count().collect()
-            )
-            touched = sorted(int(r[0]) for r in bucket_stats)
-            rows_in = int(sum(r[1] for r in bucket_stats))
-            existing_paths = [p for b in touched for p in old_buckets.get(str(b), [])]
+
+        # 1. light pass — only a CoW merge into a table with files unions
+        #    existing rows, so only it needs the touched buckets BEFORE the
+        #    main pass: one column-pruned aggregation of ~n_buckets rows.
+        #    A MOR merge only appends; supersession is resolved at read time.
+        touched = [] if mor_append or not any(old_buckets.values()) else sorted(
+            self._bucket_counts(batch))
 
         # 2. main pass — ONE shuffle, ONE sort: in-batch dedup and
-        #    resolve-vs-existing are the same rule (latest order_col wins,
-        #    incoming beats existing on ties — CDC replace_one semantics,
-        #    mongo_db.py:72-83), so both collapse into a single window over
-        #    the bucket exchange (write-aligned; a key never straddles
-        #    buckets). MOR skips the union: the deduped batch is written as a
-        #    delta per bucket and supersession is resolved at read time.
-        new_part = (
-            batch.withColumn(_BUCKET_COL, self._bucket)
-            .withColumn(_SNAP_COL, F.lit(next_id))
-            .withColumn(_IS_NEW_COL, F.lit(1))
-        )
-        if not light_pass:
-            rows_in_obs = Observation()
-            new_part = new_part.observe(rows_in_obs, F.count(F.lit(1)).alias("rows_in"))
-        if existing_paths:
-            # bucket value is derivable from the key; recompute rather
-            # than trusting directory names (survives schema drift)
-            existing = self._scan(snap, existing_paths).withColumn(_BUCKET_COL, self._bucket)
-            if _SNAP_COL not in existing.columns:
-                existing = existing.withColumn(_SNAP_COL, F.lit(-1))
-            existing = existing.withColumn(_IS_NEW_COL, F.lit(0))
-            merged = new_part.unionByName(existing, allowMissingColumns=True)
-        else:
-            merged = new_part
-        resolved = self._resolve_winners(merged, new_wins_ties=True).drop(_IS_NEW_COL)
-        schema = self._next_schema(snap, resolved)
-
-        # 3. write files for touched buckets only; the data is already
-        #    exchanged on the bucket column, so partitionBy writes straight
-        #    out of the window's partitioning — no second shuffle
+        #    resolve-vs-existing are the same latest-wins rule, so both
+        #    collapse into a single window over the bucket exchange
+        #    (write-aligned; a key never straddles buckets). The batch
+        #    carries __snap = next_id, so it beats existing rows on order_col
+        #    ties. The data is already exchanged on the bucket column, so
+        #    partitionBy writes straight out of the window's partitioning.
+        obs = Observation()
+        tagged = batch.withColumn(_SNAP_COL, F.lit(next_id)).observe(
+            obs, F.count(F.lit(1)).alias("rows_in"))
         bounds = dict(snap.get("bounds", {})) if snap else {}
-        out_dir, written, rows_dedup = self._write_buckets(resolved, f"s{next_id:06d}", bounds)
+        out_dir, replaced, rows_dedup, schema = self._rewrite(
+            snap, touched, f"s{next_id:06d}", bounds, batch=tagged)
         attempt_dirs = [out_dir]
-        if not light_pass:
-            # every batch row has a winner, so the written bucket dirs are
-            # exactly the buckets the batch touches; an empty write may
-            # report no observed metrics: skip the wait
-            touched = sorted(written)
-            rows_in = int(rows_in_obs.get["rows_in"]) if touched else 0
-
+        # every batch row has a winner, so the written bucket dirs are
+        # exactly the buckets the batch touches; an empty write may report
+        # no observed metrics: skip the wait
+        rows_in = int(obs.get["rows_in"]) if replaced else 0
         new_buckets = dict(old_buckets)
-        for b, bpath in written.items():
-            new_buckets[str(b)] = (new_buckets.get(str(b), []) if mor_append else []) + [bpath]
-        snapshot = {
-            "id": next_id,
-            "parent": snap["id"] if snap else None,
-            "buckets": new_buckets,
-            "committed_batches": sorted(committed | {batch_id}),
-            "merge_keys": self.merge_keys,
-            "order_col": self.order_col,
-            "n_buckets": self.n_buckets,
-            "merge_salts": self.merge_salts,
-            "delete_where": self.delete_where,
-            "schema": schema,
-        }
+        for b, bpaths in replaced.items():
+            new_buckets[b] = (new_buckets.get(b, []) if mor_append else []) + bpaths
+        snapshot = self._manifest(snap, new_buckets, schema, batch_id)
 
-        # 3b. auto-compaction (MOR): buckets whose delta chain grew past the
-        #     threshold are rewritten to a single winners file inside this
-        #     same commit, bounding read-time resolution cost
-        overlong = [fs for fs in new_buckets.values() if len(fs) > self.compact_threshold]
+        # 3. auto-compaction (MOR): buckets whose delta chain grew past the
+        #    threshold are rewritten to a single winners file inside this
+        #    same commit, bounding read-time resolution cost
+        overlong = [b for b, fs in new_buckets.items() if len(fs) > self.compact_threshold]
         if mor_append and overlong:
-            # the snapshot's schema holds __snap: this commit wrote it
-            cpaths = sorted({p for fs in overlong for p in fs})
-            cdf = self._scan(snapshot, cpaths).withColumn(_BUCKET_COL, self._bucket)
-            cdir, compacted, _ = self._write_buckets(
-                self._resolve_winners(cdf), f"s{next_id:06d}-compact", bounds)
+            cdir, compacted, _, _ = self._rewrite(
+                snapshot, overlong, f"s{next_id:06d}-compact", bounds)
             attempt_dirs.append(cdir)
-            new_buckets.update({str(b): [p] for b, p in compacted.items()})
+            new_buckets.update(compacted)
 
         self._publish(snapshot, bounds, attempt_dirs)
         m = MergeMetrics(
-            batch_id, next_id, rows_in, rows_dedup, len(touched), self.n_buckets, time.time() - t0
+            batch_id, next_id, rows_in, rows_dedup, len(replaced), self.n_buckets, time.time() - t0
         )
         self._log_lineage(m)
         return m

@@ -189,6 +189,36 @@ def test_purge_tombstones_logs_its_wall_time(spark, tmp_path):
     assert rec["seconds"] > 0
 
 
+def test_purge_rewrites_hit_buckets_from_their_own_files_without_a_sort(
+        spark, tmp_path, monkeypatch):
+    """On a CoW table every bucket holds one dir, so the purge rewrites the
+    buckets holding purgeable tombstones from those buckets' files alone,
+    in one stage: no winner sort, so no Exchange."""
+    from urllib.parse import urlparse
+
+    t = MergeTable(spark, str(tmp_path / "t"), merge_keys=KEYS, n_buckets=8,
+                   delete_where="op = 'd'")
+    t.merge(_mk(spark, [(i, "r", f"f{i}.py", f"c{i}", f"v{i}", "u") for i in range(40)]), "b1")
+    t.merge(_mk(spark, [(100 + i, "r", f"f{i}.py", f"c{i}", None, "d") for i in (0, 1)]), "b2")
+    buckets = t.current_snapshot()["buckets"]
+    assert all(len(ps) == 1 for ps in buckets.values())
+    hit_dirs = {os.path.normpath(ps[0]) for ps in buckets.values() if "/s000001-" in ps[0]}
+    assert 1 <= len(hit_dirs) < len(buckets)
+    frames = []
+    write = MergeTable._write_buckets
+
+    def spy(self, df, name, bounds):
+        frames.append(df)
+        return write(self, df, name, bounds)
+
+    monkeypatch.setattr(MergeTable, "_write_buckets", spy)
+    assert t.purge_tombstones(below_seq=1000)["tombstones_removed"] == 2
+    (df,) = frames
+    read = {os.path.dirname(urlparse(f).path) for f in df.inputFiles()}
+    assert read == hit_dirs
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_purge_tombstones_reclaims_its_dir_on_commit_conflict(spark, tmp_path, monkeypatch):
     from ethereum_etl_spark.plans.merge import CommitConflict
 

@@ -56,7 +56,14 @@ def test_normalize_invariants(changes):
 
 
 def test_merge_latest_wins(spark, tmp_path):
-    tbl = MergeTable(spark, str(tmp_path / "t"), merge_keys=["repo", "path"], order_col="seq")
+    for mode, compact_threshold in (("cow", 8), ("mor", 8), ("mor", 2)):
+        _check_latest_wins(spark, str(tmp_path / f"{mode}{compact_threshold}"),
+                           mode, compact_threshold)
+
+
+def _check_latest_wins(spark, root, mode, compact_threshold):
+    tbl = MergeTable(spark, root, merge_keys=["repo", "path"], order_col="seq",
+                     mode=mode, compact_threshold=compact_threshold)
     df1 = spark.createDataFrame(
         [(1, "r", "a", "v1"), (2, "r", "a", "v2"), (1, "r", "b", "w1")],
         "seq long, repo string, path string, content string",
@@ -72,6 +79,15 @@ def test_merge_latest_wins(spark, tmp_path):
     tbl.merge(df2, "b2")
     state = {(r["repo"], r["path"]): r["content"] for r in tbl.read().collect()}
     assert state == {("r", "a"): "v2", ("r", "b"): "w3"}
+    # an incoming row wins an order_col tie with a committed one: its
+    # __snap is the next snapshot id. At compact_threshold=2 this merge
+    # puts a third file in r/b's bucket, so the compaction decides the tie.
+    tbl.merge(spark.createDataFrame([(3, "r", "b", "w3-again")], df2.schema), "b3")
+    state = {(r["repo"], r["path"]): r["content"] for r in tbl.read().collect()}
+    assert state == {("r", "a"): "v2", ("r", "b"): "w3-again"}, (mode, compact_threshold)
+    compacted = any("-compact-" in p for ps in tbl.current_snapshot()["buckets"].values()
+                    for p in ps)
+    assert compacted == (compact_threshold == 2)
 
 
 def test_merge_exactly_once_and_replay_idempotent(spark, changes, tmp_path):

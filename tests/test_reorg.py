@@ -43,7 +43,7 @@ def test_divergence_detected_then_reexport_converges(spark, tmp_path):
     assert find_divergence_seq(table, canonical, probe_from=900) == FORK
 
     reexport_range(spark, canonical, table, FORK, N - 1)
-    got = table.read().drop("__bucket")
+    got = table.read()
     assert got.count() == N
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0

@@ -89,6 +89,31 @@ class TestBpeEncode:
         assert 3 <= out["n_tokens_bpe"] < len("bananabandanacabana")
 
 
+    def test_oracle_matches_when_fewer_merges_are_learned(self, spark):
+        """'ab ab abab ba' runs out of pairs after 3 merges, fewer than the
+        registry's _BPE_MERGES rounds: the DuckDB oracles must still equal
+        train_bpe / encode_bpe (an empty round must not empty the words)."""
+        import duckdb
+
+        import __spark_entry__ as entry
+
+        rows = [(1, "ab ab abab"), (2, "ba x!"), (3, "")]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        merges = train_bpe(bpe_word_table(docs), merges=entry._BPE_MERGES)
+        assert [(m["left_sym"], m["right_sym"]) for m in merges] == [
+            ("a", "b"), ("ab", "ab"), ("b", "a")]
+        got = encode_bpe(docs, [(m["left_sym"], m["right_sym"]) for m in merges])
+        con = duckdb.connect()
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+        oracle = entry.oracle_sql()
+        assert sorted(con.execute(oracle["encode_bpe"]).fetchall()) == sorted(
+            tuple(r) for r in got.collect()) == [(1, 3, 3), (2, 2, 2), (3, 0, 0)]
+        assert sorted(con.execute(oracle["vocab_train_bpe"]).fetchall()) == [
+            tuple(m[k] for k in ("merge_rank", "left_sym", "right_sym", "merged",
+                                 "pair_count")) for m in merges]
+
+
 class TestTokenizeAllRowsContract:
     def test_empty_docs_present_with_zero_tokens(self, spark):
         docs = spark.createDataFrame(

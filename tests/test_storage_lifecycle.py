@@ -128,8 +128,8 @@ class TestSnapshotExpiry:
         assert len(_data_dirs(bounded.root)) <= 2
         assert _du_files(bounded.root) < _du_files(grower.root) / 5
         # identical final state
-        a = {tuple(r) for r in grower.read().drop("__bucket").collect()}
-        b = {tuple(r) for r in bounded.read().drop("__bucket").collect()}
+        a = {tuple(r) for r in grower.read().collect()}
+        b = {tuple(r) for r in bounded.read().collect()}
         assert a == b
 
     def test_expire_noop_on_empty_table(self, spark, tmp_path):
