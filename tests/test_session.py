@@ -27,3 +27,9 @@ def test_defaults_fit_the_host_and_env_overrides(monkeypatch):
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "5g")
     assert session._cpus() == 3
     assert session._driver_memory() == "5g"
+
+
+def test_parquet_files_are_written_with_zstd(spark):
+    """Iceberg's default ``write.parquet.compression-codec``; every parquet
+    writer in the engine inherits it from the session."""
+    assert spark.conf.get("spark.sql.parquet.compression.codec") == "zstd"
